@@ -7,6 +7,11 @@ Reference parity:
   - unit conversions                (F5,  extractor.py:446-448, 505-516)
   - string similarity               (F11, evaluate.py:208-231)
   - NFKC + noise strip              (F12, normalizer.py:148-151, 179, 189)
+  - URL canonicalization for exact-URL dedup, with its DuckDB oracle twin
+
+Only `redact_pii`, `levenshtein_ratio` and the URL canonicalizer are on a
+surface (`contract`, `operators.evaluate`); the other helpers are
+reference-parity primitives that only their tests call.
 """
 
 from __future__ import annotations
@@ -59,7 +64,6 @@ def fix_numeric_confusables(col: Column) -> Column:
 
 UNIT_MULTIPLIERS = {"k": 1_000.0, "lakh": 100_000.0, "m": 1_000_000.0,
                     "crore": 10_000_000.0}
-KW_TO_HP = 1.34  # extractor.py:446-448
 
 
 def scale_by_unit(value: Column, unit: Column) -> Column:
@@ -68,7 +72,7 @@ def scale_by_unit(value: Column, unit: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# F11 — string similarity, native: levenshtein ratio + token-set Jaccard
+# F11 — string similarity, native: levenshtein ratio
 # ---------------------------------------------------------------------------
 
 def levenshtein_ratio(a: Column, b: Column) -> Column:
@@ -79,19 +83,9 @@ def levenshtein_ratio(a: Column, b: Column) -> Column:
     )
 
 
-def token_jaccard(a: Column, b: Column) -> Column:
-    ta = F.array_distinct(F.split(F.lower(F.trim(a)), r"\s+"))
-    tb = F.array_distinct(F.split(F.lower(F.trim(b)), r"\s+"))
-    return F.round(
-        F.size(F.array_intersect(ta, tb))
-        / F.greatest(F.size(F.array_union(ta, tb)), F.lit(1)),
-        4,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Token-sort ratio (ref thefuzz usage, extractor.py:295-307) — pure-Python
-# inside an Arrow batch; used only for the small fuzzy master-data join (J2)
+# inside an Arrow batch
 # ---------------------------------------------------------------------------
 
 def _lev(a: str, b: str) -> int:
@@ -210,10 +204,6 @@ def nfkc_normalize(s: pd.Series) -> pd.Series:
 
 def nfkc_normalize_py(x: str) -> str:
     return unicodedata.normalize("NFKC", x).translate(_NOISE)
-
-
-# sanity: the UDF and the pure fn must agree (used by tests)
-_SELFTEST = re.compile(r"\s+")
 
 
 # ---------------------------------------------------------------------------

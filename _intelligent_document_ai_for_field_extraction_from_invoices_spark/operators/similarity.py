@@ -203,9 +203,10 @@ def _ivf_scores_arrow(emb: DataFrame, cent_rows, key: str,
     left-associative over j, sqrt is IEEE-correctly-rounded in both
     runtimes, and the denominator multiplies norms before the divide in
     the same order. Length-mismatched (vector, centroid) pairs emit
-    NULL, replicating zip_with's null-pad poisoning. Rounding to 6 dp
-    stays in Spark (HALF_UP). Bit-equality with the expression tier is
-    pinned by tests/test_similarity_kmeans.py."""
+    NULL, replicating zip_with's null-pad poisoning, and so does every
+    pair with a NULL centroid vector (zip_with over NULL is NULL).
+    Rounding to 6 dp stays in Spark (HALF_UP). Bit-equality with the
+    expression tier is pinned by tests/test_similarity_kmeans.py."""
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.types import DoubleType  # noqa: PLC0415
 
@@ -213,7 +214,8 @@ def _ivf_scores_arrow(emb: DataFrame, cent_rows, key: str,
     out_t = StructType([StructField("k", kt),
                         StructField("centroid_id", cent_id_type),
                         StructField("_raw", DoubleType())])
-    cents = [(cid, [float(x) for x in cv]) for cid, cv in cent_rows]
+    cents = [(cid, None if cv is None else [float(x) for x in cv])
+             for cid, cv in cent_rows]
     cid_list = [cid for cid, _ in cents]
     n_cents = len(cents)
 
@@ -225,7 +227,8 @@ def _ivf_scores_arrow(emb: DataFrame, cent_rows, key: str,
         # the same double the JVM fold yields per pair)
         by_dim: dict = {}
         for pos, (_cid, cv) in enumerate(cents):
-            by_dim.setdefault(len(cv), []).append(pos)
+            if cv is not None:  # NULL centroid: in no bank -> NULL sims
+                by_dim.setdefault(len(cv), []).append(pos)
         banks = {}
         for dim, poss in by_dim.items():
             mat_c = np.asarray([cents[p][1] for p in poss],
@@ -307,7 +310,7 @@ def ivf_assign(emb: DataFrame, num_centroids: int = 8, key: str = "vec_id",
         engine = ("arrow"
                   if centroids is None and num_centroids >= 32 else "sql")
     if engine == "arrow":
-        cent_rows = [(r[0], list(r[1])) for r in cents.collect()]
+        cent_rows = [(r[0], r[1]) for r in cents.collect()]
         raw = _ivf_scores_arrow(emb, cent_rows, key, vec_col,
                                 cents.schema["centroid_id"].dataType)
         scored = raw.select(F.col("k").alias(key), "centroid_id",

@@ -36,18 +36,6 @@ CHECKPOINT_TABLE = "checkpoint"
 WARC_DAY_COL = "warc_day"
 
 
-def with_warc_day(pages: DataFrame) -> DataFrame | None:
-    """Derive the crawl-day partition column, or None when the pages have
-    no warc_ts. ONE definition shared by the batch pipeline and
-    streaming.extract_stream — the whole point of the shared layout is
-    that batch and streamed results prune identically, which two
-    independent date_format copies would silently break."""
-    if "warc_ts" not in pages.columns:
-        return None
-    return pages.withColumn(
-        WARC_DAY_COL, F.date_format("warc_ts", "yyyy-MM-dd"))
-
-
 def stamp_part_id(pages: DataFrame, num_partitions: int) -> DataFrame:
     return pages.withColumn(
         "part_id",
@@ -107,19 +95,19 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
     # me one day of one crawl" — a manifest-pruned scan instead of a full
     # table scan); warc_day rides through the extraction UDF as a
     # passthrough column so no join-back shuffle is needed
-    dayed = with_warc_day(pages)
-    partition_results = dayed is not None
+    partition_results = "warc_ts" in pages.columns
     if partition_results and catalog.exists(RESULTS_TABLE):
-        # resume guard (same as streaming.extract_stream's): a results table
-        # written by the pre-day-layout pipeline has no warc_day column, and
-        # mixing partitioned and unpartitioned files would make day-pruned
-        # reads silently drop the old rows (read() samples schema from one
-        # file -> old rows surface warc_day=NULL). Match the existing layout.
+        # resume guard: a results table written by the pre-day-layout
+        # pipeline has no warc_day column, and mixing partitioned and
+        # unpartitioned files would make day-pruned reads silently drop the
+        # old rows (read() samples schema from one file -> old rows surface
+        # warc_day=NULL). Match the existing layout.
         schema = (catalog._read_current(RESULTS_TABLE) or {}).get("schema") \
             or ""
         partition_results = f'"{WARC_DAY_COL}"' in schema
     if partition_results:
-        pages = dayed
+        pages = pages.withColumn(
+            WARC_DAY_COL, F.date_format("warc_ts", "yyyy-MM-dd"))
 
     stamped = stamp_part_id(pages, num_partitions)
     done = committed_parts(spark, catalog)

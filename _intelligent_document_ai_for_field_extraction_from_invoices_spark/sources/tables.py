@@ -546,6 +546,12 @@ class Catalog:
             rows.extend(self._read_manifest(e))
         merged = self._write_manifest(
             table, rows, [t for e in small for t in e.get("txns", [])])
+        # provenance: the merged rows are the sources' rows concatenated in
+        # this order, so read_incremental can tell the rows a commit added
+        # from the ones it only re-homed without opening the parent's
+        # manifests
+        merged["merged_from"] = [[e.get("manifest"), e["n_files"]]
+                                 for e in small]
         small_ids = {id(e) for e in small}
         return [e for e in entries if id(e) not in small_ids] + [merged]
 
@@ -1442,16 +1448,20 @@ class Catalog:
                          until_version: int | None = None) -> DataFrame:
         """Incremental (CDC-style) read: the rows ADDED by append commits
         in `(since_version, until_version]` (until defaults to the current
-        snapshot), each tagged with `_commit_version` and `_commit_txn` —
-        the Iceberg incremental-append-scan shape that lets a downstream
-        consumer catch up on a table without re-reading it. `since_version
-        = 0` streams the full history from table creation.
+        snapshot), each tagged with `_commit_version` and `_commit_txn`
+        (null for an untagged append) — the Iceberg incremental-append-scan
+        shape that lets a downstream consumer catch up on a table without
+        re-reading it. `since_version = 0` streams the full history from
+        table creation.
 
-        Semantics per commit operation: `append` contributes its NEW
-        manifest entries' files (manifest files are immutable and appends
-        keep the parent's entries untouched, so the entry-path diff is
-        exact and opens only the delta's manifests — O(new entries), not
-        O(table)); `compact` is logically a no-op and contributes nothing;
+        Semantics per commit operation: `append` contributes the files of
+        the manifest entries it added (manifest files are immutable and
+        appends keep the parent's entries untouched, so the entry-path diff
+        opens only the delta's manifests — O(new entries), not O(table)).
+        An append whose commit folded small manifests together (see
+        `_maybe_merge`) adds a merged entry that also holds the parent's
+        rows; its `merged_from` provenance marks which slice is new.
+        `compact` is logically a no-op and contributes nothing;
         `overwrite` and `rollback` REMOVE rows, which an added-rows feed
         cannot express — they raise ValueError so a consumer can fall back
         to a full re-read instead of silently missing deletions. A
@@ -1462,8 +1472,13 @@ class Catalog:
         commit + only the NEW manifests), the whole delta reads as ONE
         parquet relation under the until-snapshot's recorded schema (plan
         size independent of the commit count — no per-commit union), and
-        the file->commit tag map joins via a broadcast on the normalized
-        input file name."""
+        the file->commit tag map joins via a broadcast on the file names
+        exactly as Spark spells them (`inputFiles()` and
+        `input_file_name()` share one URI encoding, so no decoding step can
+        mangle a `+` or `%` in the path). A row whose file found no tag
+        fails the query instead of dropping out of the feed."""
+        from urllib.parse import unquote, urlparse  # noqa: PLC0415
+
         from pyspark.sql import functions as F  # noqa: PLC0415
 
         until = (until_version if until_version is not None
@@ -1479,11 +1494,6 @@ class Catalog:
 
             schema = StructType.fromJson(json.loads(snap_u["schema"]))
 
-        def _entry_keys(snap: dict | None) -> set:
-            if snap is None:
-                return set()
-            return {e.get("manifest") for e in snap["manifests"]}
-
         def _empty() -> DataFrame:
             if schema is not None:
                 base = spark.createDataFrame([], schema)
@@ -1498,7 +1508,7 @@ class Catalog:
         if since_version == until:
             return _empty()
         prev = self._snap(table, since_version) if since_version else None
-        fmap: list[tuple[str, int, str | None]] = []
+        tag_of: dict[str, tuple[int, str | None]] = {}
         for v in range(since_version + 1, until + 1):
             snap = self._snap(table, v)
             op = snap.get("operation")
@@ -1511,29 +1521,48 @@ class Catalog:
                     f"read_incremental: version {v} of {table!r} is a "
                     f"'{op}' commit, which removes rows — an added-rows "
                     "feed cannot express it; re-read the table instead")
-            seen = _entry_keys(prev)
+            # manifest==None only on upgraded legacy snapshots; such an
+            # entry can only be PARENT state (appends write real manifest
+            # files), so the None key in `seen` handles it
+            seen = ({e.get("manifest") for e in prev["manifests"]}
+                    if prev else set())
             for e in snap["manifests"]:
-                # manifest==None only on upgraded legacy snapshots; such
-                # an entry can only be PARENT state (appends write real
-                # manifest files), so the None key in `seen` handles it
                 if e.get("manifest") in seen:
                     continue
-                for r in self._read_manifest(e):
-                    fmap.append((os.path.abspath(r["path"]), v,
-                                 snap.get("txn")))
+                rows = self._read_manifest(e)
+                off = 0
+                for src, n in (e.get("merged_from")
+                               or [[e.get("manifest"), len(rows)]]):
+                    if src not in seen:
+                        for r in rows[off:off + n]:
+                            tag_of[os.path.abspath(r["path"])] = (
+                                v, snap.get("txn"))
+                    off += n
             prev = snap
-        if not fmap:
+        if not tag_of:
             return _empty()
         reader = spark.read.schema(schema) if schema is not None \
             else spark.read
-        df = reader.parquet(*sorted(p for p, _, _ in fmap))
+        df = reader.parquet(*sorted(tag_of))
+        tags = []
+        for uri in df.inputFiles():
+            path = os.path.abspath(unquote(urlparse(uri).path))
+            if path not in tag_of:
+                raise RuntimeError(
+                    f"read_incremental: scanned file {uri!r} has no commit "
+                    "tag")
+            tags.append((uri, *tag_of[path]))
         tags = spark.createDataFrame(
-            fmap, "_path string, _commit_version int, _commit_txn string")
-        norm = F.url_decode(
-            F.regexp_replace(F.input_file_name(), "^[a-z]+:/+", "/"))
-        return (df.withColumn("_path", norm)
-                .join(F.broadcast(tags), "_path")
-                .drop("_path"))
+            tags, "_path string, _commit_version int, _commit_txn string")
+        untagged = F.raise_error(F.lit(
+            "read_incremental: a row's input file matched no commit tag"))
+        return (df.withColumn("_path", F.input_file_name())
+                .join(F.broadcast(tags), "_path", "left")
+                .drop("_path")
+                .withColumn("_commit_version",
+                            F.when(F.col("_commit_version").isNull(),
+                                   untagged)
+                            .otherwise(F.col("_commit_version"))))
 
     @staticmethod
     def _residual(F, df: DataFrame, col: str, pred: tuple):

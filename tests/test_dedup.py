@@ -138,9 +138,15 @@ def test_bpe_token_counts_engine_identity_adversarial(spark, tmp_path):
 def test_contamination_flags_known_overlaps(spark):
     """Decontamination: docs embedding a benchmark n-gram are flagged; the
     count is the number of DISTINCT contaminated n-grams; short docs
-    (< n words) and clean docs pass with zero."""
+    (< n words), NULL texts and clean docs pass with zero. Whitespace
+    edges follow the other shingle streams: only spaces are trimmed, so a
+    leading/trailing tab or newline is an empty first/last word; interior
+    ASCII whitespace runs split words; NBSP does not."""
     bench = spark.createDataFrame(
-        [(100, "the quick brown fox jumps over the lazy dog tonight")],
+        [(100, "the quick brown fox jumps over the lazy dog tonight"),
+         (101, None),
+         # leading newline: an empty first word, the clean 8-gram remains
+         (102, "\nalpha beta gamma delta epsilon zeta eta theta")],
         "doc_id long, text string")
     w = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
     docs = spark.createDataFrame([
@@ -150,14 +156,23 @@ def test_contamination_flags_known_overlaps(spark):
         (3, "too short"),                    # < 8 words: no shingles
         # one exact benchmark 8-gram inside other text
         (4, f"{w} quick brown fox jumps over the lazy dog {w}"),
+        (5, None),
+        # leading tab: empty first word, so the first 8-gram misses
+        (6, "\tthe quick brown fox jumps over the lazy dog"),
+        # spaces trimmed, interior tab/newline/VT runs split like spaces
+        (7, "  the\tquick\nbrown\x0bfox  jumps over the lazy dog tonight  "),
+        # trailing tab: empty last word, the last 8-gram misses
+        (8, "the quick brown fox jumps over the lazy dog\t"),
+        # NBSP is not a separator: "lazy\u00a0dog" is one word
+        (9, "the quick brown fox jumps over the lazy\u00a0dog"),
+        (10, "alpha beta gamma delta epsilon zeta eta theta"),
     ], "doc_id long, text string")
-    rows = {r.doc_id: r for r in
+    rows = {r.doc_id: (r.n_contaminated, r.contaminated) for r in
             dedup.contamination_flags(docs, bench, n=8).collect()}
-    assert len(rows) == 4
-    assert rows[1].contaminated and rows[1].n_contaminated == 3
-    assert not rows[2].contaminated and rows[2].n_contaminated == 0
-    assert not rows[3].contaminated and rows[3].n_contaminated == 0
-    assert rows[4].contaminated and rows[4].n_contaminated == 1
+    assert rows == {1: (3, True), 2: (0, False), 3: (0, False),
+                    4: (1, True), 5: (0, False), 6: (2, True),
+                    7: (3, True), 8: (2, True), 9: (0, False),
+                    10: (1, True)}
     dedup.release_caches()
 
 

@@ -1,4 +1,4 @@
-"""Evaluation job (results vs golden) + broadcast master-data joins."""
+"""Evaluation job (results vs golden)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -6,9 +6,6 @@ from pyspark.sql import functions as F
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark import datagen
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
     evaluate as ev,
-)
-from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
-    master,
 )
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators.extract import (
     extract_pages,
@@ -81,41 +78,3 @@ def test_confidence_distribution_and_errors(spark, results):
     errs = {r.category: r.n for r in ev.error_breakdown(results).collect()}
     assert errs.get("empty_input", 0) > 0
     assert errs["none"] > 0
-
-
-def test_eval_markdown_report(spark, results, golden_table):
-    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.reporting import (
-        render_eval_report,
-    )
-
-    ok = results.filter(F.col("status") == "success")
-    md = render_eval_report(ok, golden_table)
-    assert "body byte-match rate: 100.00%" in md
-    assert "| title |" in md and "| pub_date |" in md
-    assert "## Errors" in md
-
-
-def test_fuzzy_site_match(spark, results):
-    m = master.default_site_master(spark)
-    named = results.filter(F.col("status") == "success").withColumn(
-        "title", F.lit("example site 3"))  # token-sorted exact vs master row 3
-    got = master.fuzzy_match_site(named.limit(5), m)
-    rows = got.collect()
-    assert len(rows) == 5
-    assert all(r.canonical_name == "Example Site 3" for r in rows)
-    assert all(r.match_score == 1.0 for r in rows)
-
-
-def test_expected_lang_validation(spark, results, documents):
-    docs = documents.select(
-        F.col("doc_id"), F.col("lang")
-    )
-    with_lang = results.withColumn(
-        "doc_id", F.regexp_extract("url", r"doc-(\d+)$", 1).cast("long")
-    ).join(docs, "doc_id")
-    m = master.default_site_master(spark)
-    got = master.validate_expected_lang(with_lang, m)
-    rows = got.collect()
-    assert len(rows) == results.count()
-    assert all(r.expected_lang is not None for r in rows)  # every host known
-    assert any(r.lang_ok for r in rows) and any(r.lang_ok is False for r in rows)

@@ -386,9 +386,10 @@ def test_hyperplane_sql_and_loop_tiers_identical(spark):
 def test_ivf_assign_engines_identical(spark):
     """r7 pin: the Arrow scoring tier of ivf_assign must reproduce the
     expression tier exactly — same rounded sims and argmax winners —
-    including length-mismatched vectors (NULL-poisoned sims); a
-    zero-norm vector must FAIL on both engines (the expression tier
-    raises DIVIDE_BY_ZERO under ANSI mode)."""
+    including length-mismatched vectors (NULL-poisoned sims) and a NULL
+    seed vector (a NULL centroid: zip_with scores every pair against it
+    NULL); a zero-norm vector must FAIL on both engines (the expression
+    tier raises DIVIDE_BY_ZERO under ANSI mode)."""
     import random
 
     import pytest
@@ -399,13 +400,17 @@ def test_ivf_assign_engines_identical(spark):
     rows = [(i, [rng.uniform(-1, 1) for _ in range(12)]) for i in range(200)]
     rows.append((301, [1.0, 2.0]))     # length mismatch vs centroids
     rows.append((302, None))           # NULL embedding -> NULL sim row
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {}
-    for eng in ("sql", "arrow"):
-        got[eng] = sorted(
-            tuple(r) for r in
-            similarity.ivf_assign(emb, 40, engine=eng).collect())
-    assert got["sql"] == got["arrow"]
+    null_seed = list(rows)
+    null_seed[7] = (7, None)           # seed vector 7 -> NULL centroid
+    for bank in (rows, null_seed):
+        emb = spark.createDataFrame(
+            bank, "vec_id long, embedding array<double>")
+        got = {}
+        for eng in ("sql", "arrow"):
+            got[eng] = sorted(
+                tuple(r) for r in
+                similarity.ivf_assign(emb, 40, engine=eng).collect())
+        assert got["sql"] == got["arrow"]
 
     zero = spark.createDataFrame(
         [(i, [float(i == j) for j in range(8)]) for i in range(40)]
@@ -413,3 +418,4 @@ def test_ivf_assign_engines_identical(spark):
     for eng in ("sql", "arrow"):
         with pytest.raises(Exception, match="[Dd]ivi"):
             similarity.ivf_assign(zero, 40, engine=eng).collect()
+

@@ -810,27 +810,35 @@ def test_commit_crash_injection_invariants(spark, tmp_path):
 
 def test_read_incremental_appends_tagged_by_commit(spark, tmp_path):
     """(since, until] append deltas come back exactly once, tagged with
-    the committing version + txn; since=0 streams the full history;
-    since==until (and polling an absent table) is an empty feed."""
-    cat = Catalog(str(tmp_path))
-    assert cat.read_incremental(spark, "t", 0).count() == 0  # pre-creation
-    v1 = cat.overwrite("t", spark.range(3).withColumn("v", F.col("id")))
-    v2 = cat.append("t", spark.range(3, 7).withColumn("v", F.col("id")),
-                    txn="run-a")
-    v3 = cat.append("t", spark.range(7, 9).withColumn("v", F.col("id")),
-                    txn="run-b")
-    delta = cat.read_incremental(spark, "t", v1).orderBy("id").collect()
-    assert [r.id for r in delta] == [3, 4, 5, 6, 7, 8]
-    assert {r._commit_version for r in delta} == {v2, v3}
-    assert {r._commit_txn for r in delta if r.id < 7} == {"run-a"}
-    assert {r._commit_txn for r in delta if r.id >= 7} == {"run-b"}
-    # full history: the creating overwrite is a pure insert
-    assert cat.read_incremental(spark, "t", 0).count() == 9
-    # bounded until + empty range
-    assert cat.read_incremental(spark, "t", v1, v2).count() == 4
-    assert cat.read_incremental(spark, "t", v3, v3).count() == 0
-    with pytest.raises(ValueError):
-        cat.read_incremental(spark, "t", v3 + 1)
+    the committing version + txn (null for an untagged append); since=0
+    streams the full history; since==until (and polling an absent table)
+    is an empty feed. The catalog root may hold URI-special characters:
+    a '+', a space or a '%' in a path must not cost the feed its rows."""
+    for root in ("plain", "a+b c%20d"):
+        cat = Catalog(str(tmp_path / root))
+        assert cat.read_incremental(spark, "t", 0).count() == 0  # absent
+        v1 = cat.overwrite("t", spark.range(3).withColumn("v", F.col("id")))
+        v2 = cat.append("t", spark.range(3, 7).withColumn("v", F.col("id")),
+                        txn="run-a")
+        v3 = cat.append("t", spark.range(7, 9).withColumn("v", F.col("id")),
+                        txn="run-b")
+        delta = cat.read_incremental(spark, "t", v1).orderBy("id").collect()
+        assert [r.id for r in delta] == [3, 4, 5, 6, 7, 8]
+        assert {r._commit_version for r in delta} == {v2, v3}
+        assert {r._commit_txn for r in delta if r.id < 7} == {"run-a"}
+        assert {r._commit_txn for r in delta if r.id >= 7} == {"run-b"}
+        # full history: the creating overwrite is a pure insert
+        assert cat.read_incremental(spark, "t", 0).count() == 9
+        # bounded until + empty range
+        assert cat.read_incremental(spark, "t", v1, v2).count() == 4
+        assert cat.read_incremental(spark, "t", v3, v3).count() == 0
+        with pytest.raises(ValueError):
+            cat.read_incremental(spark, "t", v3 + 1)
+        # an append without a txn still flows, tagged with a null txn
+        v4 = cat.append("t", spark.range(9, 11).withColumn("v", F.col("id")))
+        got = sorted((r.id, r._commit_version, r._commit_txn) for r in
+                     cat.read_incremental(spark, "t", v3).collect())
+        assert got == [(9, v4, None), (10, v4, None)]
 
 
 def test_read_incremental_skips_compact_rejects_removals(spark, tmp_path):
@@ -854,11 +862,18 @@ def test_read_incremental_skips_compact_rejects_removals(spark, tmp_path):
 
 
 def test_read_incremental_random_histories_match_model(spark, tmp_path):
-    """Model-based check: random append/compact histories -> every
-    (since, until) window's incremental read equals the model's 'rows
-    added by appends in range', tagged with the right commit version;
-    windows crossing an overwrite raise."""
+    """Model-based check: a 44-commit append/compact history with random
+    append sizes and txn tags (long enough for an append commit to fold
+    small manifests together, see MERGE_MIN) -> every random (since,
+    until) window's incremental read equals the model's 'rows added in
+    range' exactly once each, tagged with the right commit version; the
+    creating overwrite counts only for since=0, windows crossing a later
+    overwrite raise."""
     import random
+
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources.tables import (
+        MERGE_MIN,
+    )
 
     rng = random.Random(20260817)
     next_id = [0]
@@ -875,31 +890,37 @@ def test_read_incremental_random_histories_match_model(spark, tmp_path):
         "v", F.col("id")))
     history[v] = ("overwrite", list(range(4)))
     next_id[0] = 4
-    for step in range(8):
-        op = rng.choice(["append", "append", "append", "compact"])
-        if op == "append":
+    for step in range(42):
+        # the 21-append run between the two compacts crosses MERGE_MIN
+        if step not in (8, 30):
             ids = fresh_rows(rng.randint(1, 5))
             df = spark.createDataFrame([(i, i) for i in ids],
                                        "id long, v long")
-            v = cat.append("t", df, txn=f"s{step}")
+            v = cat.append("t", df, txn=f"s{step}" if step % 3 else None)
             history[v] = ("append", ids)
         else:
             cv = cat.compact(spark, "t")["version"]
             if cv is not None:  # no-op compact (already right-sized)
                 history[cv] = ("compact", [])
+    # a closing overwrite: every window reaching it must raise
+    v = cat.overwrite("t", spark.range(0, 2).withColumn("v", F.col("id")))
+    history[v] = ("overwrite", [0, 1])
     versions = sorted(history)
-    for _ in range(12):
-        a, b = sorted(rng.sample(versions, 2))
-        window_ops = [history[x][0] for x in versions if a < x <= b]
-        if "overwrite" in window_ops:
+    assert len(versions) >= 40
+    assert any(e.get("merged_from") for s in cat.snapshots("t")
+               for e in s["manifests"]), \
+        f"history never merged {MERGE_MIN} small manifests"
+    windows = [(0, versions[-2])] + [
+        tuple(sorted(rng.sample([0] + versions, 2))) for _ in range(14)]
+    for a, b in windows:
+        if any(history[x][0] == "overwrite" for x in versions
+               if a < x <= b and x != versions[0]):
             with pytest.raises(ValueError):
                 cat.read_incremental(spark, "t", a, b).collect()
             continue
-        expect = {}
-        for x in versions:
-            if a < x <= b and history[x][0] == "append":
-                for i in history[x][1]:
-                    expect[i] = x
-        got = {r.id: r._commit_version
-               for r in cat.read_incremental(spark, "t", a, b).collect()}
+        expect = sorted((i, x) for x in versions if a < x <= b
+                        and history[x][0] != "compact"
+                        for i in history[x][1])
+        got = sorted((r.id, r._commit_version)
+                     for r in cat.read_incremental(spark, "t", a, b).collect())
         assert got == expect, (a, b)
