@@ -245,6 +245,10 @@ _ATTR_RE = re.compile(
     r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)(?:\s*=\s*(\"[^\"]*\"|'[^']*'|[^\s/>]+))?"
 )
 _ATTR_TAGS = frozenset(["meta", "time", "html"])  # handlers read these attrs
+# Close-tag search for the raw-text jumps (skip tags, <title>): searched in
+# the page itself, ASCII-case-insensitive. A doc.lower() copy is not
+# offset-safe: U+0130 'İ' lowercases to two code points.
+_CLOSE_RE = {t: re.compile("</" + t, re.I | re.A) for t in (*SKIP_TAGS, "title")}
 
 
 def _parse_attrs(s: str) -> list[tuple[str, str]]:
@@ -295,7 +299,6 @@ class _Tokenizer:
 
         pos, n = 0, len(doc)
         find = doc.find
-        lower = None  # doc.lower(), built lazily (only needed for CDATA tags)
         while True:
             lt = find("<", pos)
             if lt == -1:
@@ -344,20 +347,16 @@ class _Tokenizer:
                 attrs = []
             if tag in SKIP_TAGS and not selfclose:
                 # CDATA-mode content: skip to the matching close tag
-                if lower is None:
-                    lower = doc.lower()
-                close = lower.find("</" + tag, pos)
-                if close == -1:
+                close = _CLOSE_RE[tag].search(doc, pos)
+                if close is None:
                     pos = n
                 else:
-                    gt = find(">", close)
+                    gt = find(">", close.start())
                     pos = n if gt == -1 else gt + 1
                 continue
             if tag == "title" and not selfclose:
-                if lower is None:
-                    lower = doc.lower()
-                close = lower.find("</title", pos)
-                content_end = n if close == -1 else close
+                close = _CLOSE_RE["title"].search(doc, pos)
+                content_end = n if close is None else close.start()
                 self.handle_starttag("title", attrs)
                 self.handle_data(
                     unescape(doc[pos:content_end])
@@ -365,10 +364,10 @@ class _Tokenizer:
                     pos,
                 )
                 self.handle_endtag("title")
-                if close == -1:
+                if close is None:
                     pos = n
                 else:
-                    gt = find(">", close)
+                    gt = find(">", content_end)
                     pos = n if gt == -1 else gt + 1
                 continue
             if selfclose:

@@ -219,3 +219,27 @@ def test_ws_norm_pattern_is_exactly_pythons_unicode_whitespace():
     for cp in range(0x11000):
         ch = chr(cp)
         assert bool(re.match(r"\s", ch)) == bool(cls.match(ch)), hex(cp)
+
+
+def test_dotted_capital_i_does_not_shift_raw_text_jumps():
+    """U+0130 'İ' lowercases to two code points, so a close-tag search over
+    doc.lower() landed one character late per 'İ' before the tag: twelve of
+    them in a <title> swallowed '</title></he' and emptied the body."""
+    body = "<p>Body paragraph with enough characters to be kept here.</p>"
+    html = ("<html><head><title>" + "İ" * 12 + "</title></head><body>"
+            + body + "</body></html>").encode()
+    r = golden.extract_page("u", html)
+    assert r["title"] == "İ" * 12
+    assert r["body_text"] == "Body paragraph with enough characters to be kept here."
+
+    html = ("<html><body><p>İstanbul " + "İ" * 20 + "</p>"
+            "<script>var s = 1;</script><p>Second paragraph after the script,"
+            " long enough to be kept.</p></body></html>").encode()
+    r = golden.extract_page("u", html)
+    assert r["body_text"].endswith(
+        "\nSecond paragraph after the script, long enough to be kept.")
+    # the search is ASCII-case-insensitive: upper-case close tags still end
+    # the raw text; the Kelvin sign is not an ASCII 'k' and 'İ' is not an 'i'
+    p = golden.tokenize_html("<TITLE>İK</TİTLE>x</Title><p>after</p>")
+    assert p.title_parts == ["İK</TİTLE>x"]
+    assert [n["text"] for n in p.nodes] == ["after"]
