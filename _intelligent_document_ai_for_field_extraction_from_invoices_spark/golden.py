@@ -25,13 +25,15 @@ from __future__ import annotations
 
 import re
 from decimal import ROUND_HALF_UP, Decimal
+from html import unescape
+from typing import NamedTuple
 
 
 def round4(x: float, nd: int = 4) -> float:
     """Round half-away-from-zero on the shortest decimal representation —
     matches Spark's F.round (Java BigDecimal HALF_UP), NOT Python's banker's
-    round(). Scores feed keep/argmax decisions, so golden and the native
-    relational twin must round identically.
+    round(). Scores feed keep/argmax decisions, so the rounding rule is part
+    of the outputs the golden tests pin.
 
     Fast path: plain floor arithmetic, exact whenever the scaled value is
     not within 1e-6 of a .5 tie (float error here is ~1e-12 relative); only
@@ -122,15 +124,14 @@ _MONTHS = {
 }
 _MONTH_ABBR = {m[:3]: n for m, n in _MONTHS.items()}
 
-# Shared-pattern discipline: the extractor pattern STRINGS below are reused
-# VERBATIM by the native relational twin (operators/nodes.py regexp_extract,
-# Java regex) — so they are pinned to ASCII semantics. Python's \d/\s/\w/\b
-# are Unicode-aware (\d matches Devanagari १५ and int() parses it!) while
-# Java/RE2 default to ASCII: a shared '\d' silently compiles to two
-# different character classes. [0-9], the explicit whitespace class, and
-# ASCII lookarounds mean both engines compile the identical automaton.
-_WS = r" \t\n\r\f\x0B"  # Java \s == this set; Python \s is a superset
-_AW = "A-Za-z0-9_"      # Java \w == this set
+# The extractor patterns below are pinned to ASCII semantics: [0-9], the
+# explicit whitespace class and ASCII lookarounds instead of Python's
+# Unicode-aware \d/\s/\w/\b (\d matches Devanagari १५ and int() parses it).
+# They stay ASCII because widening them changes outputs (Devanagari digits,
+# NBSP-separated dates, 'क2024-…' edges), which tests/test_golden_pin.py
+# pins; they also compile to the same automaton in a Java regex engine.
+_WS = r" \t\n\r\f\x0B"  # Java's \s; Python's \s is a superset
+_AW = "A-Za-z0-9_"      # Java's \w
 
 # Byline patterns (ref dealer-name extractors F1, extractor.py:72-89; the
 # Hindi/Gujarati bank mirrors the ref's multilingual labels, extractor.py:87
@@ -174,15 +175,15 @@ _CHARSET_RE = re.compile(rb"charset\s*=\s*[\"']?([A-Za-z0-9_\-]+)")
 
 # Whitespace NORMALIZATION is deliberately Unicode (NBSP etc. collapse to
 # one space — that's content cleanup, unlike the ASCII-pinned extractor
-# patterns above). The twin shares this exact string: it is Python's \s set
-# for str patterns spelled as an EXPLICIT class (enumerated from CPython),
-# because no inline flag means the same thing in both engines — Java (?U)
-# is a syntax error in Python re, and Java's bare \s is ASCII-only.
+# patterns above). WS_NORM_PATTERN is the set _norm_ws collapses, Python's
+# \s for str patterns, spelled as an EXPLICIT class (enumerated from
+# CPython; test_golden checks it still equals \s) for any other regex
+# engine that has to reproduce it: Java's bare \s is ASCII-only and its
+# (?U) flag is a syntax error in Python re.
 WS_NORM_PATTERN = (
     r"[ \t\n\x0B\f\r\x1c-\x1f\x85\xa0\u1680"
     r"\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]+"
 )
-_WS_RE = re.compile(WS_NORM_PATTERN)
 
 
 def _norm_ws(s: str) -> str:
@@ -217,176 +218,107 @@ def decode_html(data: bytes) -> str:
 # ---------------------------------------------------------------------------
 
 class _Block:
-    __slots__ = ("uid", "tag", "depth", "class_id", "boiler", "meta_block",
-                 "chunks", "n_link_chars", "char_off", "boiler_inc")
+    __slots__ = ("tag", "depth", "class_id", "boiler", "meta_block",
+                 "chunks", "n_link_chars", "char_off")
 
-    def __init__(self, uid, tag, depth, class_id, boiler, meta_block, boiler_inc):
-        self.uid = uid
+    def __init__(self, tag, depth, class_id, boiler, meta_block):
         self.tag = tag
         self.depth = depth
         self.class_id = class_id
         self.boiler = boiler
         self.meta_block = meta_block
-        self.boiler_inc = boiler_inc
         self.chunks: list[str] = []
         self.n_link_chars = 0
         self.char_off = -1
 
 
-# start/end tag scanner: quoted attr values may contain '>' (regex below
-# handles them); anything the pattern rejects is treated as literal text,
-# matching lenient-recovery semantics
-_TAG_RE = re.compile(
-    r"<(?:/(?P<end>[a-zA-Z][a-zA-Z0-9:_-]*)[^>]*>"
-    r"|(?P<start>[a-zA-Z][a-zA-Z0-9:_-]*)"
-    r"(?P<attrs>(?:\"[^\"]*\"|'[^']*'|[^>\"'])*)>)"
+class _Parsed(NamedTuple):
+    nodes: list[dict]
+    title_parts: list[str]
+    metas: list[tuple[str, str]]
+    time_attrs: list[str]
+    html_lang: str | None
+
+
+# One token per match, in one pass of a single pattern: (1) a text run,
+# a comment / <!...> / <?...> (no group; unterminated ones run to EOF),
+# (2) an end tag, (3, 4) a start tag and its attribute string (quoted values
+# may contain '>'), or (5) a lone '<' the tag patterns reject, which is
+# literal text (lenient recovery).
+_TAG = r"[a-zA-Z][a-zA-Z0-9:_-]*"
+_TOKEN_RE = re.compile(
+    r"([^<]+)|<(?:!--[\s\S]*?(?:-->|\Z)|![^>]*>?|\?[^>]*>?)"
+    rf"|</({_TAG})[^>]*>|<({_TAG})((?:[^>\"']+|\"[^\"]*\"|'[^']*')*+)>|(<)"
 )
 _ATTR_RE = re.compile(
     r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)(?:\s*=\s*(\"[^\"]*\"|'[^']*'|[^\s/>]+))?"
 )
-_ATTR_TAGS = frozenset(["meta", "time", "html"])  # handlers read these attrs
 # Close-tag search for the raw-text jumps (skip tags, <title>): searched in
 # the page itself, ASCII-case-insensitive. A doc.lower() copy is not
 # offset-safe: U+0130 'İ' lowercases to two code points.
 _CLOSE_RE = {t: re.compile("</" + t, re.I | re.A) for t in (*SKIP_TAGS, "title")}
 
+# What a tag does to the tokenizer state, by kind
+_BLOCK, _INLINE, _A, _TIME, _META, _HTML, _HEAD, _TITLE, _SKIP = range(9)
+_NAMED_KINDS = {"head": _HEAD, "meta": _META, "html": _HTML, "title": _TITLE,
+                "time": _TIME, "a": _A, **dict.fromkeys(SKIP_TAGS, _SKIP)}
+_KINDS: dict[str, tuple[str, int]] = {}  # raw tag name -> (tag, kind)
+_KINDS_MAX = 4096  # bound on distinct raw spellings cached per process
 
-def _parse_attrs(s: str) -> list[tuple[str, str]]:
-    from html import unescape  # noqa: PLC0415 — lazy; hot path skips it
 
-    out = []
-    for m in _ATTR_RE.finditer(s):
-        v = m.group(2)
-        if v is None:
-            v = ""
-        elif v and v[0] in "\"'":
+def _kind(raw: str) -> tuple[str, int]:
+    tag = raw.lower()
+    kind = _NAMED_KINDS.get(tag)
+    if kind is None:
+        kind = _INLINE if tag in VOID_TAGS or tag in INLINE_TAGS else _BLOCK
+    if len(_KINDS) < _KINDS_MAX:
+        _KINDS[raw] = (tag, kind)
+    return tag, kind
+
+
+def _parse_attrs(s: str) -> dict[str, str]:
+    """Attribute string -> {lowercased name: unescaped value}; a repeated
+    name keeps its last value."""
+    out = {}
+    for name, v in _ATTR_RE.findall(s):
+        if v and v[0] in "\"'":
             v = v[1:-1]
         if "&" in v:
             v = unescape(v)
-        out.append((m.group(1).lower(), v))
+        out[name.lower()] = v
     return out
 
 
-class _Tokenizer:
-    """Tokenizer producing the node stream of FIXTURES.md §2.
+def tokenize_html(doc: str) -> _Parsed:
+    """Decoded page -> the node stream of FIXTURES.md §2, plus the title
+    text parts, (name, content) metas, <time datetime> values and <html
+    lang>.
 
     Replaces the reference's Tesseract call (ocr.py:259-268): block/line/word
-    numbering -> node_idx/depth; bbox -> (char_off, n_chars).
+    numbering -> node_idx/depth; bbox -> (char_off, n_chars). Block-level
+    tags open blocks; text attaches to the innermost open block; inline tags
+    only mark anchor text (link density). Raw-text tags (script, style,
+    noscript, template, title) jump to their close tag. Rules the output
+    depends on: entities are unescaped per text chunk; a rejected '<' is
+    its own chunk; link chars are counted per chunk after whitespace
+    collapse; char_off is the offset of the block's first non-blank chunk;
+    attributes are parsed only for meta/time/html and for block tags whose
+    attribute string contains 'class' or 'id' (case-sensitive probe)."""
+    nodes: list[dict] = []
+    title_parts: list[str] = []
+    metas: list[tuple[str, str]] = []
+    time_attrs: list[str] = []
+    html_lang = None
+    stack: list[_Block] = []
+    head = anchor = 0  # open <head> / <a> counts
+    kinds = _KINDS
+    n = len(doc)
 
-    The driver is a C-speed regex scanner (scan()) feeding the same
-    handle_starttag/endtag/data state machine html.parser would — measured
-    ~3x faster than the stdlib parse loop, with identical semantics on
-    well-formed and mildly malformed input (lenient recovery: unparseable
-    '<' is literal text; unterminated comments/CDATA-tags run to EOF)."""
-
-    def __init__(self, doc: str):
-        self.nodes: list[dict] = []
-        self.title_parts: list[str] = []
-        self.metas: list[tuple[str, str]] = []
-        self.time_attrs: list[str] = []
-        self.html_lang: str | None = None
-        self._stack: list[_Block] = []
-        self._uid = 0
-        self._skip = 0       # inside script/style/...
-        self._head = 0       # inside <head>
-        self._title = 0      # inside <title>
-        self._anchor = 0     # inside <a>
-        self._boiler = 0     # inside boilerplate container
-
-    # -- scanner driver -----------------------------------------------------
-    def scan(self, doc: str) -> None:
-        from html import unescape  # noqa: PLC0415
-
-        pos, n = 0, len(doc)
-        find = doc.find
-        while True:
-            lt = find("<", pos)
-            if lt == -1:
-                if pos < n:
-                    self._emit_data(doc[pos:], pos, unescape)
-                return
-            if lt > pos:
-                self._emit_data(doc[pos:lt], pos, unescape)
-            head = doc[lt + 1:lt + 2]
-            if head == "!":
-                if doc.startswith("<!--", lt):
-                    end = find("-->", lt + 4)
-                    pos = n if end == -1 else end + 3
-                else:  # doctype / CDATA-decl: to the next '>'
-                    gt = find(">", lt)
-                    pos = n if gt == -1 else gt + 1
-                continue
-            if head == "?":
-                gt = find(">", lt)
-                pos = n if gt == -1 else gt + 1
-                continue
-            m = _TAG_RE.match(doc, lt)
-            if not m:
-                self._emit_data("<", lt, unescape)
-                pos = lt + 1
-                continue
-            pos = m.end()
-            end_tag = m.group("end")
-            if end_tag is not None:
-                self.handle_endtag(end_tag.lower())
-                continue
-            tag = m.group("start").lower()
-            attrs_str = m.group("attrs") or ""
-            selfclose = attrs_str.endswith("/")
-            # lazy attr parse: only tags whose attributes the handlers read
-            # (meta/time/html always; block tags only for class/id signals —
-            # substring probe may rarely over-trigger e.g. on 'width', which
-            # just costs a parse, never changes semantics)
-            if attrs_str and (
-                tag in _ATTR_TAGS
-                or (tag not in INLINE_TAGS and tag not in VOID_TAGS
-                    and ("class" in attrs_str or "id" in attrs_str))
-            ):
-                attrs = _parse_attrs(attrs_str[:-1] if selfclose else attrs_str)
-            else:
-                attrs = []
-            if tag in SKIP_TAGS and not selfclose:
-                # CDATA-mode content: skip to the matching close tag
-                close = _CLOSE_RE[tag].search(doc, pos)
-                if close is None:
-                    pos = n
-                else:
-                    gt = find(">", close.start())
-                    pos = n if gt == -1 else gt + 1
-                continue
-            if tag == "title" and not selfclose:
-                close = _CLOSE_RE["title"].search(doc, pos)
-                content_end = n if close is None else close.start()
-                self.handle_starttag("title", attrs)
-                self.handle_data(
-                    unescape(doc[pos:content_end])
-                    if "&" in doc[pos:content_end] else doc[pos:content_end],
-                    pos,
-                )
-                self.handle_endtag("title")
-                if close is None:
-                    pos = n
-                else:
-                    gt = find(">", content_end)
-                    pos = n if gt == -1 else gt + 1
-                continue
-            if selfclose:
-                self.handle_startendtag(tag, attrs)
-            else:
-                self.handle_starttag(tag, attrs)
-
-    def _emit_data(self, chunk: str, off: int, unescape) -> None:
-        if "&" in chunk:
-            chunk = unescape(chunk)
-        self.handle_data(chunk, off)
-
-    # -- helpers ----------------------------------------------------------
-    def _flush(self, blk: _Block) -> None:
+    def pop() -> None:
+        blk = stack.pop()
         text = _norm_ws("".join(blk.chunks))
-        if not text:
-            return
-        self.nodes.append(
-            {
+        if text:
+            nodes.append({
                 "tag": blk.tag,
                 "text": text,
                 "depth": blk.depth,
@@ -398,139 +330,107 @@ class _Tokenizer:
                 "meta_block": blk.meta_block,
                 # computed once here; keep_for_body/assemble_body reuse it
                 "score": block_score(blk.tag, len(text), blk.n_link_chars),
-            }
-        )
+            })
 
-    # -- parser callbacks ---------------------------------------------------
-    def handle_starttag(self, tag, attrs):
-        if tag in SKIP_TAGS:
-            self._skip += 1
-            return
-        if tag == "head":
-            self._head += 1
-            return
-        ad = dict(attrs)
-        if tag == "meta":
-            key = ad.get("name") or ad.get("property") or ""
-            content = ad.get("content")
-            if key and content is not None:
-                self.metas.append((key.lower(), content))
-            return
-        if tag == "html":
-            if ad.get("lang"):
-                self.html_lang = ad["lang"]
-            return
-        if tag == "title":
-            self._title += 1
-            return
-        if tag == "time":
-            if ad.get("datetime"):
-                self.time_attrs.append(ad["datetime"])
-            # falls through: <time> is inline, text still collected
-        if tag == "a":
-            self._anchor += 1
-        if tag in VOID_TAGS or tag in INLINE_TAGS:
-            return
-        # block-level element
-        class_id = _norm_ws(f"{ad.get('class', '')} {ad.get('id', '')}")
-        if tag in AUTOCLOSE_TAGS and self._stack and self._stack[-1].tag == tag:
-            self._pop_block()
-        boiler_inc = tag in BOILER_TAGS or bool(class_id and BOILER_RE.search(class_id))
-        if boiler_inc:
-            self._boiler += 1
-        meta_block = bool(class_id and META_BLOCK_RE.search(class_id)) or (
-            self._stack and self._stack[-1].meta_block
-        )
-        self._uid += 1
-        self._stack.append(
-            _Block(
-                self._uid,
-                tag,
-                len(self._stack) + 1,
-                class_id,
-                self._boiler > 0,
-                bool(meta_block),
-                boiler_inc,
-            )
-        )
-
-    def handle_startendtag(self, tag, attrs):
-        self.handle_starttag(tag, attrs)
-        if tag not in VOID_TAGS and tag not in INLINE_TAGS and tag not in SKIP_TAGS \
-                and tag not in ("head", "meta", "html", "title"):
-            self._pop_block()
-        elif tag in SKIP_TAGS:
-            self._skip = max(0, self._skip - 1)
-        elif tag == "a":
-            # mirror handle_endtag: a self-closed <a/> must not leave the
-            # anchor counter raised, or every later chunk counts as link
-            # chars and the density filter drops the whole remaining body
-            self._anchor = max(0, self._anchor - 1)
-        elif tag == "title":
-            self._title = max(0, self._title - 1)
-        elif tag == "head":
-            self._head = max(0, self._head - 1)
-
-    def _pop_block(self):
-        blk = self._stack.pop()
-        if blk.boiler_inc:
-            self._boiler = max(0, self._boiler - 1)
-        self._flush(blk)
-
-    def handle_endtag(self, tag):
-        if tag in SKIP_TAGS:
-            self._skip = max(0, self._skip - 1)
-            return
-        if tag == "head":
-            self._head = max(0, self._head - 1)
-            return
-        if tag == "title":
-            self._title = max(0, self._title - 1)
-            return
-        if tag == "a":
-            self._anchor = max(0, self._anchor - 1)
-            return
-        if tag in VOID_TAGS or tag in INLINE_TAGS:
-            return
-        # lenient recovery: pop up to the matching open block, if any
-        for i in range(len(self._stack) - 1, -1, -1):
-            if self._stack[i].tag == tag:
-                while len(self._stack) > i:
-                    self._pop_block()
-                return
-        # stray end tag: ignored (parse_failures counted at a higher level)
-
-    def handle_data(self, data, off):
-        if self._skip:
-            return
-        if self._title:
-            self.title_parts.append(data)
-            return
-        if self._head:
-            return
-        if not data or not self._stack:
-            return
-        blk = self._stack[-1]
-        if blk.char_off < 0 and data.strip():
-            blk.char_off = off
-        blk.chunks.append(data)
-        if self._anchor:
-            blk.n_link_chars += len(_norm_ws(data))
-
-    def finish(self):
-        while self._stack:
-            self._pop_block()
-        # document order by first-text offset; uid breaks ties deterministically
-        self.nodes.sort(key=lambda n: (n["char_off"], n["tag"]))
-        for i, n in enumerate(self.nodes):
-            n["node_idx"] = i
-        return self
-
-
-def tokenize_html(doc: str) -> _Tokenizer:
-    tok = _Tokenizer(doc)
-    tok.scan(doc)
-    return tok.finish()
+    pos = 0
+    while True:  # one finditer per raw-text jump
+        for m in _TOKEN_RE.finditer(doc, pos):
+            g = m.lastindex
+            if g == 1 or g == 5:  # text run or literal '<'
+                if head or not stack:
+                    continue
+                text = m[g]
+                if "&" in text:
+                    text = unescape(text)
+                blk = stack[-1]
+                if blk.char_off < 0 and text.strip():
+                    blk.char_off = m.start()
+                blk.chunks.append(text)
+                if anchor:
+                    blk.n_link_chars += len(_norm_ws(text))
+            elif g == 2:  # end tag
+                raw = m[2]
+                tag, kind = kinds.get(raw) or _kind(raw)
+                if kind == _BLOCK:
+                    # lenient recovery: pop up to the matching open block;
+                    # a stray end tag is ignored
+                    if stack and stack[-1].tag == tag:
+                        pop()
+                        continue
+                    for i in range(len(stack) - 2, -1, -1):
+                        if stack[i].tag == tag:
+                            while len(stack) > i:
+                                pop()
+                            break
+                elif kind == _A:
+                    if anchor:
+                        anchor -= 1
+                elif kind == _HEAD:
+                    if head:
+                        head -= 1
+            elif g == 4:  # start tag
+                raw, attrs = m[3], m[4]
+                tag, kind = kinds.get(raw) or _kind(raw)
+                selfclose = attrs.endswith("/")
+                if kind == _BLOCK:
+                    if tag in AUTOCLOSE_TAGS and stack and stack[-1].tag == tag:
+                        pop()
+                    if selfclose:  # an empty block: opened, closed, no node
+                        continue
+                    class_id = ""
+                    if "class" in attrs or "id" in attrs:
+                        ad = _parse_attrs(attrs)
+                        class_id = _norm_ws(
+                            f"{ad.get('class', '')} {ad.get('id', '')}")
+                    boiler = tag in BOILER_TAGS or bool(
+                        class_id and BOILER_RE.search(class_id))
+                    meta_block = bool(class_id and META_BLOCK_RE.search(class_id))
+                    if stack:
+                        boiler = boiler or stack[-1].boiler
+                        meta_block = meta_block or stack[-1].meta_block
+                    stack.append(_Block(tag, len(stack) + 1, class_id, boiler,
+                                        meta_block))
+                elif kind == _INLINE:
+                    pass
+                elif kind == _A:
+                    if not selfclose:
+                        anchor += 1
+                elif kind == _HEAD:
+                    if not selfclose:
+                        head += 1
+                elif kind in (_TIME, _META, _HTML):
+                    ad = _parse_attrs(attrs[:-1] if selfclose else attrs)
+                    if kind == _META:
+                        key = ad.get("name") or ad.get("property") or ""
+                        content = ad.get("content")
+                        if key and content is not None:
+                            metas.append((key.lower(), content))
+                    elif kind == _HTML:
+                        if ad.get("lang"):
+                            html_lang = ad["lang"]
+                    elif ad.get("datetime"):
+                        time_attrs.append(ad["datetime"])
+                elif not selfclose:  # raw text: jump past the close tag
+                    start = m.end()
+                    close = _CLOSE_RE[tag].search(doc, start)
+                    if kind == _TITLE:
+                        t = doc[start:n if close is None else close.start()]
+                        title_parts.append(unescape(t) if "&" in t else t)
+                    pos = n
+                    if close is not None:
+                        gt = doc.find(">", close.start())
+                        if gt != -1:
+                            pos = gt + 1
+                    break
+        else:
+            break
+    while stack:
+        pop()
+    # document order by first-text offset; ties keep close order
+    nodes.sort(key=lambda nd: (nd["char_off"], nd["tag"]))
+    for i, nd in enumerate(nodes):
+        nd["node_idx"] = i
+    return _Parsed(nodes, title_parts, metas, time_attrs, html_lang)
 
 
 # ---------------------------------------------------------------------------
@@ -557,8 +457,7 @@ def keep_for_body(node: dict) -> bool:
         if node["tag"] != "body":
             return False
     # NOTE: no heading check needed here — h1..h6 are not in BODY_TAGS, so
-    # they already returned False above (the native twin nodes.py mirrors
-    # exactly this shape; do not add a redundant check that could diverge)
+    # they already returned False above
     if node["n_chars"] < MIN_BODY_CHARS:
         return False
     if 3 * node["n_link_chars"] > MAX_LINK_DENSITY_NUM * node["n_chars"]:

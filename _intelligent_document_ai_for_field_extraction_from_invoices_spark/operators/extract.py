@@ -1,6 +1,6 @@
 """The flagship distributed operator: pages -> extraction results.
 
-One wide stage: scan -> salted shuffle -> mapInPandas(golden extraction over
+One wide stage: scan -> salted shuffle -> mapInArrow(golden extraction over
 Arrow batches) -> native select. The UDF streams (iterator of batches, never
 materializes a partition) and the per-document parse loop runs inside each
 Arrow batch — no per-row Python UDFs anywhere (north star).
@@ -44,7 +44,8 @@ def extract_pages(pages: DataFrame, *, num_partitions: int | None = None,
     reference's per-document stage ms, executable.py:92-96, ocr.py:624-639;
     ~1us perf_counter overhead per doc). Off by default so the flagship
     result schema stays stable."""
-    import pandas as pd  # noqa: PLC0415 — ships to workers
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+    from pyspark.sql.types import StructType  # noqa: PLC0415
 
     passthrough = passthrough or []
     if num_partitions is None:
@@ -55,32 +56,34 @@ def extract_pages(pages: DataFrame, *, num_partitions: int | None = None,
     schema = (RESULTS_SCHEMA
               + (", wall_ms double" if with_timings else "")
               + "".join(f", {c} {t}" for c, t in passthrough))
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
 
     def run(batches):
         from time import perf_counter  # noqa: PLC0415
 
+        import pyarrow as pa  # noqa: PLC0415
         from pyspark import TaskContext  # noqa: PLC0415
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
+        for batch in batches:
+            urls = batch.column("url").to_pylist()
+            htmls = batch.column("html").to_pylist()
             if with_timings:
                 rows, ms = [], []
-                for u, h in zip(pdf["url"], pdf["html"]):
+                for u, h in zip(urls, htmls):
                     t0 = perf_counter()
                     rows.append(golden.extract_page(u, h))
                     ms.append((perf_counter() - t0) * 1000.0)
             else:
-                rows = [golden.extract_page(u, h)
-                        for u, h in zip(pdf["url"], pdf["html"])]
-            out = pd.DataFrame(rows, columns=golden.RESULT_FIELDS)
-            out["n_html_bytes"] = [
-                len(h) if h is not None else 0 for h in pdf["html"]
-            ]
-            out["part_id"] = pid
+                rows = [golden.extract_page(u, h) for u, h in zip(urls, htmls)]
+            out = {f: [r[f] for r in rows] for f in golden.RESULT_FIELDS}
+            out["n_html_bytes"] = [len(h) if h is not None else 0
+                                   for h in htmls]
+            out["part_id"] = [pid] * len(rows)
             if with_timings:
                 out["wall_ms"] = ms
             for c, _ in passthrough:
-                out[c] = pdf[c].to_numpy()
-            yield out
+                out[c] = batch.column(c)
+            yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
 
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInArrow(run, schema=schema)

@@ -210,8 +210,8 @@ def test_caseless_script_byline_validity():
 
 
 def test_ws_norm_pattern_is_exactly_pythons_unicode_whitespace():
-    """WS_NORM_PATTERN is the twin-shared explicit spelling of Python's \\s
-    (Java's bare \\s is ASCII-only, so the class must be enumerated). If a
+    """WS_NORM_PATTERN is the explicit spelling of Python's \\s (Java's bare
+    \\s is ASCII-only, so the class must be enumerated). If a
     CPython upgrade changes the \\s set, this catches the drift."""
     import re
 

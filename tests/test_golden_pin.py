@@ -18,8 +18,9 @@ Corpus (all seeded, generated in-process):
     <script/>/<title/>/<a/>/<head/>, 'İ'/Kelvin/long-s text and tag names,
     attribute edge cases, entities and truncation.
 
-To re-record after an intended output change, run this file with
-`PIN_PRINT=1` and paste the printed dict."""
+To re-record after an intended output change, run
+`PIN_PRINT=1 python -m pytest tests/test_golden_pin.py -s` and paste the
+printed dict into EXPECTED."""
 
 import hashlib
 import json

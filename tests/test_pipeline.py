@@ -66,3 +66,41 @@ def test_failed_rows_contained(spark, documents):
     # doc_id % 97 == 96 rows are empty payloads -> failed, never exceptions
     assert all(g["error_message"] == "empty" for g in failed)
     assert any(g["status"] == "success" for g in got.values())
+
+
+def test_arrow_udf_null_and_empty_html_with_passthrough(spark):
+    """Edges of the Arrow UDF: a NULL and an empty html payload, with
+    passthrough columns and timings on. The result schema is the declared
+    one, both rows are contained failures, and passthrough values (NULLs
+    included) come back unchanged."""
+    from pyspark.sql.types import StructType
+
+    ok = datagen.render_page(1, "plain words " * 20, "en")
+    pages = spark.createDataFrame(
+        [("u-null", None, 3, "2025-01-02"),
+         ("u-empty", bytearray(b""), None, "día-İ"),
+         ("u-ok", bytearray(ok), -7, None)],
+        "url string, html binary, ckpt_part int, warc_day string")
+    res = extract_pages(pages, num_partitions=2, with_timings=True,
+                        passthrough=[("ckpt_part", "int"),
+                                     ("warc_day", "string")])
+    assert res.schema == StructType.fromDDL(
+        "url string, title string, byline string, pub_date string, "
+        "body_text string, title_conf double, byline_conf double, "
+        "date_conf double, body_conf double, overall_confidence double, "
+        "status string, error_message string, n_nodes int, n_blocks_kept int, "
+        "n_blocks_dropped int, parse_failures int, body_span_start long, "
+        "body_span_len long, n_html_bytes long, part_id int, wall_ms double, "
+        "ckpt_part int, warc_day string")
+    got = {r.url: r.asDict() for r in res.collect()}
+    for u in ("u-null", "u-empty"):
+        assert got[u]["n_html_bytes"] == 0
+        assert (got[u]["status"], got[u]["error_message"]) == ("failed", "empty")
+    assert got["u-ok"]["status"] == "success"
+    assert got["u-ok"]["n_html_bytes"] == len(ok)
+    assert {u: (g["ckpt_part"], g["warc_day"]) for u, g in got.items()} == {
+        "u-null": (3, "2025-01-02"), "u-empty": (None, "día-İ"),
+        "u-ok": (-7, None)}
+    exp = golden.extract_page("u-ok", ok)
+    assert {k: got["u-ok"][k] for k in exp} == exp
+    assert all(g["wall_ms"] >= 0.0 for g in got.values())

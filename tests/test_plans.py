@@ -66,7 +66,7 @@ def test_aggregations_use_partial_hash_agg(spark):
 def test_extraction_plan_shape(spark, documents):
     """One wide stage: scan -> salted round-robin-free shuffle -> Arrow eval.
     The shuffle key must be the salted hash (hashpartitioning), and the UDF
-    stage must be ArrowEvalPython-free / MapInPandas (batched, not per-row)."""
+    stage must be one MapInArrow (batched, not per-row, no pandas)."""
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark import datagen
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators.extract import (
         extract_pages,
@@ -74,9 +74,10 @@ def test_extraction_plan_shape(spark, documents):
 
     q = extract_pages(datagen.pages_from_documents(documents))
     plan = _plan(q)
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "hashpartitioning" in plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python UDF
+    assert "ArrowEvalPython" not in plan
 
 
 def test_no_cartesian_in_shingle_pairs(spark):
