@@ -818,7 +818,7 @@ def q_neardup_components(spark, sf_dir):
 
 
 def q_minhash_lsh_pairs(spark, sf_dir):
-    # hash_fn="md5" (default): oracle-reproducible permutation hashes
+    # md5 permutation hashes: oracle-reproducible
     return dedup.minhash_lsh_pairs(_docs_wide(spark, sf_dir),
                                    min_est_jaccard=0.25)
 
@@ -941,7 +941,7 @@ def _minhash_oracle_sql(num_perms: int = dedup.MINHASH_PERMS,
                         bands: int = dedup.LSH_BANDS,
                         max_bucket: int = 256,
                         min_est_jaccard: float = 0.25) -> str:
-    """ANSI-SQL twin of dedup.minhash_lsh_pairs(hash_fn="md5"): 3-word
+    """ANSI-SQL twin of dedup.minhash_lsh_pairs: 3-word
     shingle md5 digests -> per-permutation min of the p%4-th 8-hex-char
     slice of md5(digest || ',' || p//4) -> banded buckets (md5 of the
     comma-joined band slice) -> capped self-join -> distinct pairs with

@@ -122,7 +122,6 @@ _MONTHS = {
         "november december".split()
     )
 }
-_MONTH_ABBR = {m[:3]: n for m, n in _MONTHS.items()}
 
 # The extractor patterns below are pinned to ASCII semantics: [0-9], the
 # explicit whitespace class and ASCII lookarounds instead of Python's
@@ -657,7 +656,6 @@ def assemble_body(nodes: list[dict]) -> tuple[str, int, int, float, int, int]:
 # ---------------------------------------------------------------------------
 
 _PDF_TJ_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)\)\s*Tj")
-_PDF_UNESC = {b"\\(": b"(", b"\\)": b")", b"\\\\": b"\\"}
 
 
 def pdf_escape(s: str) -> str:

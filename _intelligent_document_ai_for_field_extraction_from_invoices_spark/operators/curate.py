@@ -50,10 +50,6 @@ from .dedup import _bq
 STAGE_ORDER = ["host_sample", "exact", "neardup", "substrdup",
                "decontaminate", "quality"]
 
-# observability: the last curate_survivors run's per-stage survivor counts
-# (only populated when with_stats=True — counting costs one job per stage)
-CURATE_LAST_STATS: dict = {}
-
 
 def resolve_stages(stages: list[str] | None) -> list[str]:
     """Validate a stage subset and return it in pinned execution order
@@ -186,8 +182,7 @@ def curate_survivors(docs: DataFrame, benchmark: DataFrame,
                      max_dup_line_frac: float = 0.3,
                      substr_window: int = 64, substr_stride: int = 16,
                      substr_heavy_frac: float = 0.5,
-                     stages: list[str] | None = None,
-                     with_stats: bool = False) -> DataFrame:
+                     stages: list[str] | None = None) -> DataFrame:
     """Run the full curation chain in its pinned order and return the
     surviving documents as (key, host, quality_score, dup_line_frac).
     `stages` subsets the chain (order still pinned by STAGE_ORDER).
@@ -195,11 +190,8 @@ def curate_survivors(docs: DataFrame, benchmark: DataFrame,
     Deterministic end to end — every stage is (host quota: exact integer
     accept; exact/neardup: min-key winners; decontaminate: set
     membership; quality: fixed-weight score), so the composed survivor
-    set is engine-independent and the DuckDB oracle replays it exactly.
-    `with_stats=True` records per-stage survivor counts in
-    CURATE_LAST_STATS (one count job per stage)."""
+    set is engine-independent and the DuckDB oracle replays it exactly."""
     todo = resolve_stages(stages)
-    counts: dict[str, int] = {}
     cur = docs
     for stage in todo:
         cur = run_stage(stage, cur, benchmark=benchmark, key=key,
@@ -222,17 +214,12 @@ def curate_survivors(docs: DataFrame, benchmark: DataFrame,
         # the CLI path, which materializes each stage to the catalog
         # instead. All caches release via dedup.release_caches().
         cur = dedup.register_cache(cur.cache())
-        if with_stats:
-            counts[stage] = cur.count()
     ran_quality = "quality" in todo
     if not ran_quality:
         # the output contract always carries the quality columns
         cur = textstats.with_quality_score(cur, text_col=text_col) \
             .withColumn("dup_line_frac",
                         textstats.dup_line_frac_col(F.col(_bq(text_col))))
-    if with_stats:
-        CURATE_LAST_STATS.clear()
-        CURATE_LAST_STATS.update(stage_counts=counts, stages=todo)
     return cur.select(
         F.col(_bq(key)),
         F.col(_bq(host_col)),

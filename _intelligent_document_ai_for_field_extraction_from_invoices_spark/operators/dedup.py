@@ -2,7 +2,7 @@
 
 - exact:   hash-groupBy (one shuffle on the digest, partial agg map-side)
 - n-gram:  shingle inverted index -> candidate pairs -> token Jaccard
-- MinHash: k seeded permutations (md5- or xxhash64-derived) -> banded LSH
+- MinHash: k seeded md5-derived permutations -> banded LSH
 - SimHash: 64-bit sign-aggregated token hashes — fully native exprs
   (explode tokens -> 64 conditional sums; no Python in the hot path)
 
@@ -41,6 +41,14 @@ CC_LAST_STATS: dict = {}
 # instead of further Spark rounds (a few MB of (id, id) rows collect; the
 # label TABLE never does). Module-level so tests can pin it (0 disables).
 UF_BREAK_MAX = 500_000
+
+# shingle_pairs sources its digest stream from the Arrow twin
+# (_shingle_digest_stream_pandas) from this shingle length on: the
+# interpreted zip_with chain costs ~(n-1) array passes per doc, so the
+# twin pays off for long shingles (measured at sf1: n=8 contamination
+# 1.9 -> 1.5 s warm, n=3 parity) while short ones keep the native plan.
+# Module-level so tests can pin a tier.
+SHINGLE_ARROW_MIN_N = 5
 
 # Scoped-cache registry: hot-path operators cache DataFrames that feed
 # multiple plan branches (self-join sides, count+anti-join). The registry
@@ -182,8 +190,7 @@ def _shingle_digest_stream_pandas(df: DataFrame, key: str | None,
 
 def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
                   n: int = 3, min_shared: int = 2,
-                  max_bucket: int = 64,
-                  engine: str = "auto") -> DataFrame:
+                  max_bucket: int = 64) -> DataFrame:
     """Candidate near-dup pairs sharing >= min_shared distinct n-gram shingles.
 
     Inverted index WITHOUT a self-join: after the hot-shingle cap, each
@@ -192,19 +199,11 @@ def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
     one full shuffle of the shingle stream instead of two join sides, and
     no reliance on caching the stream. The cap (`_cap_hot_keys`) is what
     makes the collect_list safe: bucket size is bounded BEFORE buffering.
-
-    `engine`: "pandas" sources the digest stream from
-    `_shingle_digest_stream_pandas` (byte-exact); "sql" keeps the
-    native-expression stream. "auto" picks by chain depth: the
-    interpreted zip_with chain costs ~(n-1) array passes per doc, so
-    the Arrow twin pays off for long shingles (measured at sf1: n=8
-    contamination 1.9 -> 1.5 s warm, n=3 parity), while short shingles
-    keep the fully-native plan."""
-    if engine == "auto":
-        engine = "pandas" if n >= 5 else "sql"
-    if engine == "pandas":
+    The digest stream is the byte-exact Arrow twin from
+    SHINGLE_ARROW_MIN_N on, the native-expression stream below it."""
+    if n >= SHINGLE_ARROW_MIN_N:
         ex = _shingle_digest_stream_pandas(df, key, text_col, n)
-    elif engine == "sql":
+    else:
         ex = (
             df.filter(
                 F.size(F.split(F.trim(F.col(_bq(text_col))), WS_RUN)) >= n)
@@ -212,8 +211,6 @@ def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
                     F.explode(F.array_distinct(_shingles(text_col, n)))
                     .alias("sh"))
         )
-    else:
-        raise ValueError(f"unknown shingle engine: {engine!r}")
     capped = _cap_hot_keys(ex, ["sh"], max_bucket)
     buckets = (
         capped.groupBy("sh").agg(F.collect_list("k").alias("ks"))
@@ -509,38 +506,30 @@ def _bq(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _perm_hash_sql(p: int, hash_fn: str) -> str:
-    """Seeded permutation hash of a shingle digest (SQL-expression string
-    over a column named `tok`).
+def minhash_signatures(df: DataFrame, key: str = "doc_id",
+                       text_col: str = "text",
+                       num_perms: int = MINHASH_PERMS,
+                       shingle_n: int = 3) -> DataFrame:
+    """MinHash signature per doc: min over n-word shingles of
+    perm_hash(shingle, seed_p) for each of `num_perms` seeded permutations.
+    Shingles (not unigrams) are the hashed features: unigram sets over a
+    small vocabulary are near-identical across documents, which would
+    collapse every LSH bucket into one giant skew bucket.
 
-    - "md5": each md5 of "<digest>,<seed_group>" yields FOUR independent
-      32-bit permutations (hex slices of the 128-bit digest), so 16 perms
-      cost 4 md5 calls per shingle, not 16. Byte-identical in any engine
-      with md5 (the DuckDB oracle reproduces it); min is taken over the
-      8-hex-char STRING (lexicographic == numeric for fixed-width hex).
-    - "xxhash64": Spark-native seeded 64-bit hash — cheapest at scale but
-      engine-internal, so not oracle-reproducible."""
-    if hash_fn == "md5":
-        return (f"substring(md5(concat_ws(',', tok, '{p // 4}')), "
-                f"{(p % 4) * 8 + 1}, 8)")
-    if hash_fn == "xxhash64":
-        return f"xxhash64(tok, {p})"
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    Permutation hashes: each md5 of "<digest>,<seed_group>" yields FOUR
+    independent 32-bit permutations (hex slices of the 128-bit digest), so
+    16 perms cost 4 md5 calls per shingle, not 16 — byte-identical in any
+    engine with md5 (the DuckDB oracle reproduces it); min is taken over
+    the 8-hex-char STRING (lexicographic == numeric for fixed-width hex).
 
-
-def _minhash_signatures_pandas(df: DataFrame, key: str, text_col: str,
-                               num_perms: int, shingle_n: int) -> DataFrame:
-    """Arrow-batched twin of the md5 SQL tier (r7 optimization): one
-    mapInPandas pass computes each doc's permutation mins directly —
-    hashlib's C md5 over the shingle stream replaces the interpreted
-    zip_with/transform chain AND the explode + 16-min-aggregate shuffle
-    (the signature never leaves the row). EXACTLY the SQL tier's bytes:
-    trim strips 0x20 only, the split keeps leading/trailing empties
-    (Java split limit=-1 == re.split), shingles join on single spaces,
-    digests/permutation hashes are md5 hex, mins compare the 8-hex-char
-    slices lexicographically (== numeric for fixed-width hex), and docs
-    with fewer than shingle_n words emit no row. Pure integer/string
-    ops — no float to drift — pinned equal to the SQL tier by
+    One mapInPandas pass computes each doc's permutation mins directly
+    (r7: hashlib's C md5 over the shingle stream, no interpreted
+    zip_with/transform chain and no explode + min-aggregate shuffle — the
+    signature never leaves the row; ~2x the expression form at sf1).
+    Byte-exact: trim strips 0x20 only, the split keeps leading/trailing
+    empties (Java split limit=-1 == re.split), shingles join on single
+    spaces, and docs with fewer than shingle_n words emit no row. Pure
+    integer/string ops — pinned equal to `_minhash_signatures_sql` by
     tests/test_dedup.py::test_minhash_signature_engines_identical."""
     import re  # noqa: PLC0415
 
@@ -593,38 +582,16 @@ def _minhash_signatures_pandas(df: DataFrame, key: str, text_col: str,
     return out.withColumnRenamed("k", key)
 
 
-def minhash_signatures(df: DataFrame, key: str = "doc_id",
-                       text_col: str = "text",
-                       num_perms: int = MINHASH_PERMS,
-                       shingle_n: int = 3,
-                       hash_fn: str = "md5",
-                       engine: str = "auto") -> DataFrame:
-    """MinHash signature per doc: min over n-word shingles of
-    perm_hash(shingle, seed_p) for each of `num_perms` seeded permutations —
-    all native exprs. Shingles (not unigrams) are the hashed features:
-    unigram sets over a small vocabulary are near-identical across documents,
-    which would collapse every LSH bucket into one giant skew bucket.
-
-    Plan shape: explode distinct shingles -> one min-aggregate per
-    permutation. The per-perm aggregates combine map-side (partial agg), so
-    the shuffle carries num_perms values per DOC — a posexplode formulation
-    would shuffle num_perms hashed rows per SHINGLE, ~16x the data.
-
-    `engine`: "sql" = the native-expression tier above (the only tier for
-    hash_fn="xxhash64" — Python has no exact xxhash64 twin); "pandas" =
-    one Arrow-batched pass computing the mins in-row via hashlib's C md5
-    (r7: no explode shuffle, no interpreted HOF chain — measured ~2x the
-    md5 tier's speed at sf1); "auto" picks pandas for md5. Both tiers are
-    byte-identical (string/integer ops only) and test-pinned."""
-    if engine == "auto":
-        engine = "pandas" if hash_fn == "md5" else "sql"
-    if engine == "pandas":
-        if hash_fn != "md5":
-            raise ValueError("pandas minhash tier requires hash_fn='md5'")
-        return _minhash_signatures_pandas(df, key, text_col, num_perms,
-                                          shingle_n)
-    if engine != "sql":
-        raise ValueError(f"unknown minhash engine: {engine!r}")
+def _minhash_signatures_sql(df: DataFrame, key: str = "doc_id",
+                            text_col: str = "text",
+                            num_perms: int = MINHASH_PERMS,
+                            shingle_n: int = 3) -> DataFrame:
+    """The native-expression form of `minhash_signatures` — no operator
+    calls it; it is the byte-identity reference the Arrow pass is pinned
+    to (Spark's own split semantics: the DuckDB oracle's RE2 `\\s` drops
+    vertical tab, so it cannot stand in on whitespace edges). Plan:
+    explode distinct shingles -> one md5 per seed group -> one min
+    aggregate per permutation."""
     toks = df.filter(
         F.size(F.split(F.trim(F.col(_bq(text_col))), WS_RUN)) >= shingle_n
     ).select(
@@ -633,22 +600,13 @@ def minhash_signatures(df: DataFrame, key: str = "doc_id",
             F.array_distinct(_shingles(text_col, shingle_n))
         ).alias("tok"),
     )
-    # per-permutation expressions are SQL strings parsed JVM-side: building
-    # ~150 Column objects from Python costs ~1 s of py4j round-trips per
-    # query (same lesson as simhash_signatures)
-    if hash_fn == "md5":
-        # one projection computes each seed-group md5 exactly once per
-        # shingle row (explicit sharing — no reliance on codegen CSE)
-        toks = toks.selectExpr("k", *[
-            f"md5(concat_ws(',', tok, '{g}')) AS h{g}"
-            for g in range((num_perms + 3) // 4)
-        ])
-        slot = [f"substring(h{p // 4}, {(p % 4) * 8 + 1}, 8)"
-                for p in range(num_perms)]
-    else:
-        slot = [_perm_hash_sql(p, hash_fn) for p in range(num_perms)]
+    toks = toks.selectExpr("k", *[
+        f"md5(concat_ws(',', tok, '{g}')) AS h{g}"
+        for g in range((num_perms + 3) // 4)
+    ])
     mins = toks.groupBy("k").agg(*[
-        F.expr(f"min({slot[p]}) AS mh{p}") for p in range(num_perms)
+        F.expr(f"min(substring(h{p // 4}, {(p % 4) * 8 + 1}, 8)) AS mh{p}")
+        for p in range(num_perms)
     ])
     return mins.selectExpr(
         f"k AS {_bq(key)}",
@@ -660,15 +618,14 @@ def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id",
                       text_col: str = "text", bands: int = LSH_BANDS,
                       num_perms: int = MINHASH_PERMS,
                       min_est_jaccard: float = 0.5,
-                      max_bucket: int = 256,
-                      hash_fn: str = "md5") -> DataFrame:
+                      max_bucket: int = 256) -> DataFrame:
     """Banded LSH over MinHash signatures: docs colliding in any band become
     candidate pairs; estimated Jaccard = fraction of matching signature slots.
     Buckets larger than `max_bucket` are dropped before the self-join — the
     skew guard that bounds worst-case pair blowup at scale (groupBy count +
     broadcast anti-join; see `_cap_hot_keys`)."""
     rows = num_perms // bands
-    sigs = minhash_signatures(df, key, text_col, num_perms, hash_fn=hash_fn)
+    sigs = minhash_signatures(df, key, text_col, num_perms)
     banded = sigs.selectExpr(
         f"{_bq(key)} AS k",
         "signature",

@@ -224,8 +224,7 @@ def hashed_ngram_importance(docs: DataFrame, target: DataFrame,
     (the SCALE tier — native 64-bit hashing, no hex decode, measurably
     cheaper on the ~2x-tokens gram stream; same smoothing/micro-nat
     arithmetic, but bucket assignments differ so scores are only
-    comparable WITHIN a hash choice, and DuckDB has no xxhash64 twin —
-    the minhash_lsh_pairs dual-tier discipline)."""
+    comparable WITHIN a hash choice, and DuckDB has no xxhash64 twin)."""
     if num_buckets < 1 or num_buckets > (1 << 26):
         raise ValueError("hashed_ngram_importance: num_buckets must be in "
                          f"[1, 2^26], got {num_buckets}")

@@ -25,6 +25,21 @@ __all__ = [
     "HYPERPLANE_PLANES", "HYPERPLANE_BANDS", "HYPERPLANE_SQL_TERM_LIMIT",
 ]
 
+# Tier dials (r7-measured). Module-level so tests can pin a tier, like
+# dedup.UF_BREAK_MAX:
+# - ivf_assign scores seeded banks of at least this many centroids in one
+#   Arrow stage (the n x C interpreted fold chain dominates there)
+IVF_ARROW_MIN_CENTROIDS = 32
+# - grouped Arrow pair generation needs enough vectors to amortize the
+#   Python stage (below ~10k the streaming self-join is already
+#   sub-second: +0.5 s at 2k vectors, -1.5 s at 20k) and every IVF bucket
+#   bounded, since applyInPandas materializes one group per call
+GROUPED_PAIRS_MIN_VECTORS = 10_000
+GROUPED_PAIRS_MAX_BUCKET = 4096
+# - hyperplane pairs go grouped once the expected bucket n / 2^(planes /
+#   bands) holds at least this many vectors
+HYPERPLANE_GROUPED_MIN_FILL = 8
+
 
 def _unit_vectors(emb: DataFrame, key: str, vec_col: str) -> DataFrame:
     """(key, uvec): vectors normalized ONCE, so every downstream pair
@@ -287,8 +302,7 @@ def _ivf_scores_arrow(emb: DataFrame, cent_rows, key: str,
 
 def ivf_assign(emb: DataFrame, num_centroids: int = 8, key: str = "vec_id",
                vec_col: str = "embedding",
-               centroids: DataFrame | None = None,
-               engine: str = "auto") -> DataFrame:
+               centroids: DataFrame | None = None) -> DataFrame:
     """Assign each vector to its nearest centroid by cosine. Default
     centroids are the vectors with key < num_centroids (deterministic seed
     choice, reproducible in the ANSI oracles); pass `centroids` (e.g. from
@@ -297,33 +311,26 @@ def ivf_assign(emb: DataFrame, num_centroids: int = 8, key: str = "vec_id",
     (sim desc, centroid_id asc) tie-break — partial-combines map-side, no
     window sort (plan pinned Window/Sort-free in tests/test_plans.py).
 
-    `engine`: "sql" = native expression scoring; "arrow" = one Arrow
-    stage computing the raw cosines with exact fold-order parity
-    (_ivf_scores_arrow; rounding and the argmax stay in Spark). "auto"
-    picks arrow for large seeded banks (C >= 32 — the n x C interpreted
-    fold chain dominates there; small banks and trained-centroid
-    DataFrames keep the native path, which also avoids collecting a
-    not-yet-materialized training plan)."""
+    Seeded banks of C >= IVF_ARROW_MIN_CENTROIDS score the raw cosines in
+    one Arrow stage with exact fold-order parity (_ivf_scores_arrow;
+    rounding and the argmax stay in Spark); smaller banks and
+    trained-centroid DataFrames keep native expression scoring, which
+    also avoids collecting a not-yet-materialized training plan."""
     cents = centroids if centroids is not None else seed_centroids(
         emb, num_centroids, key, vec_col)
-    if engine == "auto":
-        engine = ("arrow"
-                  if centroids is None and num_centroids >= 32 else "sql")
-    if engine == "arrow":
+    if centroids is None and num_centroids >= IVF_ARROW_MIN_CENTROIDS:
         cent_rows = [(r[0], r[1]) for r in cents.collect()]
         raw = _ivf_scores_arrow(emb, cent_rows, key, vec_col,
                                 cents.schema["centroid_id"].dataType)
         scored = raw.select(F.col("k").alias(key), "centroid_id",
                             F.round(F.col("_raw"), 6).alias("sim"))
-    elif engine == "sql":
+    else:
         scored = emb.select(key, vec_col).join(F.broadcast(cents)).select(
             key,
             "centroid_id",
             F.round(cosine_col(F.col(vec_col), F.col("cvec")), 6)
             .alias("sim"),
         )
-    else:
-        raise ValueError(f"unknown ivf_assign engine: {engine!r}")
     return _argmax_centroid(scored, key, []).select(
         key, "centroid_id", F.col("sim").alias("centroid_sim"))
 
@@ -332,8 +339,7 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
                           num_centroids: int | None = None, key: str = "vec_id",
                           vec_col: str = "embedding",
                           n_hint: int | None = None,
-                          assign: DataFrame | None = None,
-                          pair_engine: str = "auto") -> DataFrame:
+                          assign: DataFrame | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, IVF-bucketed: vectors are
     assigned to their nearest centroid once, and only same-bucket pairs are
     scored — the self-join touches ~1/C^2 of the full cross product per
@@ -346,7 +352,7 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
     - vectors are unit-normalized ONCE per vector before the self-join, so
       each pair costs one dot-product fold instead of dot + two norms
       (3x fewer array folds per pair; identical result after the 6 dp
-      rounding both engines apply)
+      rounding both pair tiers apply)
     - the assigned+normalized table is cached: both self-join sides and
       the assignment aggregate would otherwise re-run the whole scoring
       pipeline. Register with `release_caches()` semantics: callers
@@ -394,26 +400,18 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
     unit = _unit_vectors(emb, key, vec_col)
     tagged = unit.join(assign.select(key, "centroid_id"), key)
     tagged = register_cache(tagged.cache())
-    if pair_engine == "auto":
-        # grouped pair generation materializes one IVF bucket per Arrow
-        # group, so it needs (a) enough pair volume to amortize the
-        # Python stage — below ~10k vectors the streaming self-join is
-        # already sub-second (measured: +0.5 s at 2k vectors, -1.5 s at
-        # 20k), and (b) every bucket bounded — ONE tiny count aggregate
-        # over the (cached) assignment answers that exactly. The corpus
-        # size comes free from the IVF sizing pass when it ran; small
-        # corpora skip the bucket probe job entirely.
-        if n_known is not None and n_known < 10_000:
-            pair_engine = "join"
-        else:
-            row = (tagged.groupBy("centroid_id").count()
-                   .agg(F.max("count").alias("mx"),
-                        F.sum("count").alias("n")).first())
-            pair_engine = ("grouped"
-                           if (row.mx or 0) <= 4096
-                           and (row.n or 0) >= 10_000
-                           else "join")
-    if pair_engine == "grouped":
+    # grouped pairs need GROUPED_PAIRS_MIN_VECTORS and every bucket within
+    # GROUPED_PAIRS_MAX_BUCKET — ONE tiny count aggregate over the (cached)
+    # assignment answers both exactly. The corpus size comes free from the
+    # IVF sizing pass when it ran; small corpora skip that probe job.
+    grouped = False
+    if n_known is None or n_known >= GROUPED_PAIRS_MIN_VECTORS:
+        row = (tagged.groupBy("centroid_id").count()
+               .agg(F.max("count").alias("mx"),
+                    F.sum("count").alias("n")).first())
+        grouped = ((row.mx or 0) <= GROUPED_PAIRS_MAX_BUCKET
+                   and (row.n or 0) >= GROUPED_PAIRS_MIN_VECTORS)
+    if grouped:
         # the join path's INNER equi-join on centroid_id drops NULL-key
         # rows (vectors no centroid could score, e.g. mismatched dims)
         # and NULL uvecs never survive the threshold — filter both here
@@ -424,8 +422,6 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
                           & F.col("uvec").isNotNull())
             .select(F.col(key).alias("k"), "uvec", "centroid_id"),
             ["centroid_id"], threshold, dedup_pairs=False)
-    if pair_engine != "join":
-        raise ValueError(f"unknown pair_engine: {pair_engine!r}")
     a = tagged.select(F.col(key).alias("vec_a"),
                       F.col("uvec").alias("ua"), "centroid_id")
     b = tagged.select(F.col(key).alias("vec_b"),
@@ -513,20 +509,18 @@ def plane_sign(p: int, j: int) -> int:
 
 def plane_dot_sql(p: int, dim: int, element: str) -> str:
     """SQL for <plane_p, v> as an UNROLLED left-associative sum with ±1
-    coefficients. Both engines evaluate the identical addition order on
-    identical doubles, so the sign test (>= 0) is bit-deterministic
-    cross-engine — no rounding needed. `element` formats one 1-indexed
-    vector element access, e.g. 'cast(try_element_at(embedding, {i}) AS
-    double)' (Spark — try_: ANSI mode makes plain element_at RAISE on an
-    out-of-bounds index, which would crash the whole job on one short
-    vector; review-verified) or 'CAST(embedding[{i}] AS DOUBLE)' (DuckDB,
-    NULL past the end).
+    coefficients — the DuckDB oracle's signature, which the Spark "loop"
+    tier of hyperplane_banded_buckets replays in the identical addition
+    order on identical doubles, so the sign test (>= 0) is
+    bit-deterministic cross-engine — no rounding needed. `element`
+    formats one 1-indexed vector element access, e.g.
+    'CAST(embedding[{i}] AS DOUBLE)' (DuckDB, NULL past the end).
 
-    Each term is coalesce'd to 0 IN BOTH ENGINES (generated from this one
-    function, so parity holds): a vector shorter than `dim` projects on
-    its actual components zero-padded instead of NULLing the whole dot —
-    the review-flagged silent failure where every short vector landed in
-    bucket 0 and the hot-bucket cap dropped the lot."""
+    Each term is coalesce'd to 0 (the loop tier zero-pads the same way):
+    a vector shorter than `dim` projects on its actual components
+    zero-padded instead of NULLing the whole dot — the review-flagged
+    silent failure where every short vector landed in bucket 0 and the
+    hot-bucket cap dropped the lot."""
     terms = " ".join(
         f"{'+' if plane_sign(p, j) > 0 else '-'} "
         f"coalesce({element.format(i=j + 1)}, 0.0)"
@@ -544,12 +538,12 @@ def signature_sql(num_planes: int, dim: int, element: str) -> str:
         for p in range(num_planes))
 
 
-# above this many planes x dim terms the unrolled signature SQL stops being
-# viable: one projection expression hits JVM parse + Janino compile walls
-# (Janino's 64 KB method limit forces interpreted fallback well before real
-# embedding dims — 768 x 64 planes would be ~49k terms), so the batched
-# matmul tier takes over. The bench/oracle shape (32 x 64 = 2048) stays SQL
-# for bit-deterministic cross-engine signs.
+# Within this many planes x dim terms the signature tier is the j-ascending
+# "loop", which replays the oracle's unrolled signature_sql sum exactly
+# (the bench/oracle shape, 32 x 64 = 2048, gets bit-deterministic
+# cross-engine signs). Past it, one batched matmul per Arrow batch runs:
+# real embedding dims (768 x 64 planes = ~49k terms) would make the loop
+# pay one NumPy pass per term.
 HYPERPLANE_SQL_TERM_LIMIT = 4096
 
 
@@ -570,7 +564,7 @@ def _corpus_dim(emb: DataFrame, vec_col: str) -> tuple[int, int, int]:
     dim on different runs and silently truncated the longer vectors).
     The scan reads only array lengths and runs once per call; the
     operator is multi-pass anyway. The row count rides along for free and
-    drives the pair-engine density dial (r7)."""
+    drives the pair-tier density dial (r7)."""
     row = emb.agg(F.min(F.size(_bq(vec_col))).alias("lo"),
                   F.max(F.size(_bq(vec_col))).alias("hi"),
                   F.count("*").alias("n")).first()
@@ -663,55 +657,33 @@ def _grouped_pair_cosines(tagged: DataFrame, group_cols: list[str],
 
 
 def hyperplane_banded_buckets(emb: DataFrame, num_planes: int, bands: int,
-                              dim: int, key: str, vec_col: str,
-                              engine: str = "auto") -> DataFrame:
-    """(k, band, bucket) banded sign-projection buckets, two tiers:
+                              dim: int, key: str,
+                              vec_col: str) -> DataFrame:
+    """(k, band, bucket) banded sign-projection buckets from one Arrow
+    batch per task, in one of two tiers:
 
-    - "sql": the planes x dim ±element terms unrolled into ONE whole-stage
-      codegen expression — bit-deterministic cross-engine (the DuckDB
-      oracle unrolls the identical sum), but with a JVM-parse/Janino
-      compile wall at real embedding dims.
-    - "loop": the r7 default inside the SQL tier's term envelope — one
-      Arrow batch per task, accumulating the plane dots with a
-      j-ascending NumPy loop (`acc += v[:, j] * signs_j`, signs ±1.0)
-      that replays the unrolled SQL's left-associative IEEE sequence
-      EXACTLY (±1.0 multiplication is a sign flip; x + (-y) == x - y),
-      so its sign bits — and therefore every bucket — are BIT-IDENTICAL
-      to the sql tier (pinned by
-      tests/test_similarity_kmeans.py::test_hyperplane_sql_and_loop_tiers_identical)
-      at a fraction of the cost (the 2048-term projection was the
-      Janino-compile/interpretation hotspot).
-    - "pandas": one batched NumPy sign(V @ P.T) matmul per Arrow batch —
-      the scale tier for real dims (768+), same md5-parity plane matrix.
-      Per-band buckets are packed directly from the sign bits, so 64-plane
-      signatures never round-trip through a signed BIGINT.
+    - "loop", within HYPERPLANE_SQL_TERM_LIMIT planes x dim terms:
+      accumulates the plane dots with a j-ascending NumPy loop
+      (`acc += v[:, j] * signs_j`, signs ±1.0) that replays the unrolled
+      `signature_sql` sum's left-associative IEEE sequence EXACTLY (±1.0
+      multiplication is a sign flip; x + (-y) == x - y), so its sign
+      bits — and therefore every bucket — are BIT-IDENTICAL to the
+      DuckDB oracle's (pinned by
+      tests/test_similarity_kmeans.py::test_hyperplane_sql_and_loop_tiers_identical).
+    - matmul, past the limit: one batched NumPy sign(V @ P.T) per Arrow
+      batch — the scale tier for real dims (768+), same md5-parity plane
+      matrix. It agrees with the loop except where a plane dot lands
+      within float addition-order noise of exactly 0 (left-assoc sum vs
+      pairwise matmul) — measure-zero for real embeddings.
 
-    "auto" picks "loop" within HYPERPLANE_SQL_TERM_LIMIT and "pandas"
-    past it. loop==sql exactly; pandas agrees except where a plane dot
-    lands within float addition-order noise of exactly 0 (left-assoc
-    sum vs pairwise matmul) — measure-zero for real embeddings."""
+    Per-band buckets are packed directly from the sign bits, so 64-plane
+    signatures never round-trip through a signed BIGINT."""
     rpb = num_planes // bands
     if rpb > 62:
         # per-band buckets pack into a signed BIGINT in both tiers
         raise ValueError(
             f"planes per band = {rpb} overflows the 63-bit bucket key: "
             "use more bands (or fewer planes)")
-    mask = (1 << rpb) - 1
-    if engine == "auto":
-        engine = ("loop" if num_planes * dim <= HYPERPLANE_SQL_TERM_LIMIT
-                  else "pandas")
-    if engine == "sql":
-        sig = signature_sql(
-            num_planes, dim,
-            f"cast(try_element_at({_bq(vec_col)}, {{i}}) AS double)")
-        sigs = emb.selectExpr(f"{_bq(key)} AS k", f"({sig}) AS sig")
-        return sigs.selectExpr(
-            "k",
-            f"posexplode(transform(sequence(0, {bands - 1}), "
-            f"b -> shiftright(sig, b * {rpb}) & {mask})) AS (band, bucket)",
-        ).select("k", "band", "bucket")
-    if engine not in ("pandas", "loop"):
-        raise ValueError(f"unknown hyperplane engine: {engine!r}")
 
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
@@ -719,18 +691,18 @@ def hyperplane_banded_buckets(emb: DataFrame, num_planes: int, bands: int,
 
     plane_t = _plane_matrix(num_planes, dim).T  # (dim, planes)
     weights = 1 << np.arange(rpb, dtype=np.int64)  # bit weights within a band
-    exact = engine == "loop"
+    exact = num_planes * dim <= HYPERPLANE_SQL_TERM_LIMIT
 
     def _buckets(vs):
         # vectors arrive as ndarray/list cells; vectors shorter than the
-        # plane matrix zero-pad — IDENTICAL semantics to the SQL tier's
-        # try_element_at + coalesce(…, 0.0), so the two tiers can't
-        # diverge on a mixed-dim corpus (review finding; mixed corpora
-        # also require an explicit dim at the API boundary)
+        # plane matrix zero-pad — IDENTICAL semantics to signature_sql's
+        # coalesce(…, 0.0) past the array end, so the tiers and the
+        # oracle can't diverge on a mixed-dim corpus (review finding;
+        # mixed corpora also require an explicit dim at the API boundary)
         mat = np.zeros((len(vs), dim), dtype=np.float64)
         for i, v in enumerate(vs):
             if v is None:
-                # the sql tier coalesces every element of a NULL cell to
+                # signature_sql coalesces every element of a NULL cell to
                 # 0.0 and buckets the row like a zero vector — keep the
                 # row as the zero-filled default instead of crashing
                 continue
@@ -741,7 +713,7 @@ def hyperplane_banded_buckets(emb: DataFrame, num_planes: int, bands: int,
             # j-ascending accumulation == the unrolled SQL's
             # left-associative sum, term for term (±1.0 products are
             # exact sign flips; the zero-pad adds exact 0.0 like
-            # coalesce) — sign bits bit-identical to the sql tier
+            # coalesce) — sign bits bit-identical to signature_sql
             acc = np.zeros((mat.shape[0], num_planes), dtype=np.float64)
             for j in range(dim):
                 acc += mat[:, j:j + 1] * plane_t[j]
@@ -752,7 +724,7 @@ def hyperplane_banded_buckets(emb: DataFrame, num_planes: int, bands: int,
                 for b in range(bands)]
         # int64 end-to-end (ADVICE round-5: an int32 cast here silently
         # wrapped buckets negative at rpb >= 32 — e.g. 64 planes / 2
-        # bands — and diverged from the SQL tier's BIGINT buckets)
+        # bands — and diverged from signature_sql's BIGINT buckets)
         return pd.Series(list(np.stack(cols, axis=1)))
 
     # the module's `from __future__ import annotations` would stringify
@@ -772,9 +744,7 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
                          bands: int = HYPERPLANE_BANDS,
                          dim: int | None = None, key: str = "vec_id",
                          vec_col: str = "embedding",
-                         max_bucket: int = 256,
-                         engine: str = "auto",
-                         pair_engine: str = "auto") -> DataFrame:
+                         max_bucket: int = 256) -> DataFrame:
     """Embedding near-dup pairs via banded random-hyperplane LSH: vectors
     colliding in any band of their sign-projection signature become
     candidates; candidates are verified by exact cosine >= threshold.
@@ -787,8 +757,8 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
     every vector into bucket 0.
 
     Scale shape mirrors the text-LSH family: signatures come from
-    `hyperplane_banded_buckets` (whole-stage-codegen unrolled sums at
-    oracle dims, ONE batched NumPy matmul per Arrow batch past
+    `hyperplane_banded_buckets` (one Arrow batch per task: the exact
+    j-ascending loop at oracle dims, ONE batched NumPy matmul past
     HYPERPLANE_SQL_TERM_LIMIT — no per-row Python either way), the banded
     explode carries `bands` ints per VECTOR on the shuffle, hot buckets
     are capped BEFORE the in-bucket pair generation buffers anything
@@ -800,7 +770,7 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
     under max_bucket — the defaults (32/4 -> 256 buckets/band) suit
     10^4-10^5 vectors; a 10^12 corpus wants 64 planes x 4 bands (65k
     buckets) plus a larger cap — real-dim 768 x 64-plane signatures run
-    on the matmul tier, which has no compile wall."""
+    on the matmul tier."""
     from .dedup import _cap_hot_keys  # noqa: PLC0415
 
     lo, hi, n = _corpus_dim(emb, vec_col)
@@ -816,23 +786,22 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
             f"hyperplane dim {dim} exceeds corpus embedding dim "
             f"{hi}; pass dim<={hi} or dim=None to derive")
     banded = hyperplane_banded_buckets(emb, num_planes, bands, dim,
-                                       key, vec_col, engine=engine)
+                                       key, vec_col)
     capped = _cap_hot_keys(banded, ["band", "bucket"], max_bucket)
     unit = register_cache(_unit_vectors(emb, key, vec_col).cache())
-    # pair-engine density dial (r7): with B = 2^(planes/bands) buckets
+    # pair-tier density dial (r7): with B = 2^(planes/bands) buckets
     # per band, the expected bucket holds n/B vectors. DENSE buckets
-    # (n/B >= 8) mean many pairs per vector — the grouped Arrow stage
-    # (_grouped_pair_cosines) moves each unit vector once per band and
-    # replaces the interpreted collect_list/nested-transform explode +
-    # distinct + two joins + per-pair fold with one NumPy pass per
-    # bucket (bit-identical; group size bounded by max_bucket). SPARSE
+    # (n/B >= HYPERPLANE_GROUPED_MIN_FILL) mean many pairs per vector —
+    # the grouped Arrow stage (_grouped_pair_cosines) moves each unit
+    # vector once per band and replaces the interpreted
+    # collect_list/nested-transform explode + distinct + two joins +
+    # per-pair fold with one NumPy pass per bucket (bit-identical;
+    # group size bounded by max_bucket). SPARSE
     # buckets (e.g. 64-plane/16-bit bands at 10^4-10^5 vectors) mean
     # candidates are rare — shuffling every vector per band would dwarf
     # the tiny pair set, so the id-only candidate join stays cheaper.
     rpb = num_planes // bands
-    if pair_engine == "auto":
-        pair_engine = "grouped" if n >= (1 << rpb) * 8 else "join"
-    if pair_engine == "grouped":
+    if n >= (1 << rpb) * HYPERPLANE_GROUPED_MIN_FILL:
         tagged = capped.join(unit.withColumnRenamed(key, "k"), "k") \
             if key != "k" else capped.join(unit, "k")
         # NULL uvecs (a NULL embedding survives _unit_vectors as NULL)
@@ -841,8 +810,6 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
         # matches exactly instead of crashing on len(None)
         tagged = tagged.filter(F.col("uvec").isNotNull())
         return _grouped_pair_cosines(tagged, ["band", "bucket"], threshold)
-    if pair_engine != "join":
-        raise ValueError(f"unknown pair_engine: {pair_engine!r}")
     buckets = (
         capped.groupBy("band", "bucket")
         .agg(F.collect_list("k").alias("ks"))

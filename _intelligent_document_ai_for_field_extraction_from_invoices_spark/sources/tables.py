@@ -310,7 +310,7 @@ def _upper_bound_str(s: str) -> str | None:
     return None
 
 
-def _file_stats(path: str, columns: list[str] | None) -> dict:
+def _file_stats(path: str) -> dict:
     """Footer-only per-file column stats: min/max/null-count per primitive
     top-level column, merged across row groups. Never reads data pages.
     Module-level (not a method) so the distributed collection path can
@@ -319,8 +319,7 @@ def _file_stats(path: str, columns: list[str] | None) -> dict:
 
     md = pq.ParquetFile(path).metadata
     fields = [md.schema.column(i).path for i in range(md.num_columns)]
-    want = [f for f in fields if "." not in f
-            and (columns is None or f in columns)][:STATS_MAX_COLUMNS]
+    want = [f for f in fields if "." not in f][:STATS_MAX_COLUMNS]
     idx = {f: fields.index(f) for f in want}
     out: dict[str, dict] = {}
     for col in want:
@@ -769,9 +768,7 @@ class Catalog:
 
     def _stage(self, table: str, df: DataFrame,
                partition_by: list[str] | None = None,
-               txn: str | None = None,
-               stats_columns: list[str] | None = None,
-               collect_stats: bool = True) -> list[dict]:
+               txn: str | None = None) -> list[dict]:
         """Write a staging commit; returns manifest rows
         [{"path", "partition", "txn", "stats"}] parsed from the hive-style
         directory layout. Partition columns are DUPLICATED into shadow
@@ -827,35 +824,30 @@ class Catalog:
                         "txn": txn,
                     })
         rows.sort(key=lambda r: r["path"])
-        if collect_stats and rows:
+        if rows:
             paths = [r["path"] for r in rows]
             if len(paths) >= STATS_DISTRIBUTE_MIN:
                 sc = df.sparkSession.sparkContext
-                cols = stats_columns
                 stats = dict(
                     sc.parallelize(paths, max(1, len(paths) // 16))
-                    .map(lambda p: (p, _file_stats(p, cols)))
+                    .map(lambda p: (p, _file_stats(p)))
                     .collect())
             else:
-                stats = {p: _file_stats(p, stats_columns) for p in paths}
+                stats = {p: _file_stats(p) for p in paths}
             for r in rows:
                 r["stats"] = stats[r["path"]]
         return rows
 
     def overwrite(self, table: str, df: DataFrame,
                   partition_by: list[str] | None = None,
-                  txn: str | None = None,
-                  stats_columns: list[str] | None = None,
-                  collect_stats: bool = True) -> int:
+                  txn: str | None = None) -> int:
         """Replace the table's contents. `txn` tags the commit the same way
         append's does, so writers with replace semantics (e.g. an index
         rebuild) get the same exactly-once replay detection via txns().
         A commit conflict rebases and retries: replace semantics clobber
         whatever the concurrent writer committed by DESIGN (the overwrite
         serializes after it)."""
-        rows = self._stage(table, df, partition_by, txn=txn,
-                           stats_columns=stats_columns,
-                           collect_stats=collect_stats)
+        rows = self._stage(table, df, partition_by, txn=txn)
         entry = self._write_manifest(table, rows, [txn], op="overwrite")
 
         def build(cur):
@@ -893,9 +885,7 @@ class Catalog:
         return StructType(merged).json()
 
     def append(self, table: str, df: DataFrame, txn: str | None = None,
-               partition_by: list[str] | None = None,
-               stats_columns: list[str] | None = None,
-               collect_stats: bool = True) -> int:
+               partition_by: list[str] | None = None) -> int:
         """Append with an optional transaction tag. A multi-table writer tags
         every table's append with one txn id and commits a marker table last;
         `remove_orphan_appends` can then roll back appends whose txn never
@@ -914,9 +904,7 @@ class Catalog:
         append/compact won the version) rebases the manifest LIST against
         the fresh snapshot and retries — neither writer's rows are lost
         (Iceberg's optimistic append)."""
-        rows = self._stage(table, df, partition_by, txn=txn,
-                           stats_columns=stats_columns,
-                           collect_stats=collect_stats)
+        rows = self._stage(table, df, partition_by, txn=txn)
         entry = self._write_manifest(table, rows, [txn])
 
         def build(cur):

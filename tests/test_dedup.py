@@ -41,8 +41,8 @@ def test_simhash_token_order_and_dup_invariant(spark):
 
 
 def test_minhash_md5_and_xxhash64_find_same_pairs(spark):
-    """Hash choice is orthogonal to LSH semantics: both variants recover the
-    identical-document pair with est_jaccard 1.0."""
+    """The md5 permutation hashes recover the identical-document pair with
+    est_jaccard 1.0 and pair nothing else."""
     base = "w%d " * 30
     rows = [
         (1, base % tuple(range(30))),
@@ -50,10 +50,9 @@ def test_minhash_md5_and_xxhash64_find_same_pairs(spark):
         (3, base % tuple(range(100, 130))),
     ]
     d = _docs(spark, rows)
-    for fn in ("md5", "xxhash64"):
-        got = {(r.doc_a, r.doc_b): r.est_jaccard
-               for r in dedup.minhash_lsh_pairs(d, hash_fn=fn).collect()}
-        assert got == {(1, 2): 1.0}, fn
+    got = {(r.doc_a, r.doc_b): r.est_jaccard
+           for r in dedup.minhash_lsh_pairs(d).collect()}
+    assert got == {(1, 2): 1.0}
 
 
 def test_hot_bucket_cap_drops_mega_buckets(spark):
@@ -66,12 +65,6 @@ def test_hot_bucket_cap_drops_mega_buckets(spark):
     assert dedup.shingle_pairs(d, max_bucket=5).count() == 0
     # with a generous cap the 10 identical docs pair up fully: C(10,2)
     assert dedup.shingle_pairs(d, max_bucket=64).count() == 45
-
-
-def test_minhash_bad_hash_fn_raises(spark):
-    d = _docs(spark, [(1, "a b c d")])
-    with pytest.raises(ValueError):
-        dedup.minhash_signatures(d, hash_fn="sha9000").collect()
 
 
 def test_exact_dedup_groups(spark):
@@ -409,7 +402,10 @@ def test_minhash_signature_engines_identical(spark):
     """r7 pin: the Arrow-batched minhash tier must emit byte-identical
     signatures to the native-expression tier — including whitespace
     edges (tabs/newlines/vertical tab, leading separators, unicode
-    words) and the fewer-than-n-words row-drop."""
+    words) and the fewer-than-n-words row-drop. The reference is
+    `_minhash_signatures_sql` (Spark's own split semantics: DuckDB's RE2
+    whitespace class excludes vertical tab, so the oracle cannot stand
+    in here)."""
     rows = [
         (1, "alpha beta gamma delta epsilon"),
         (2, "\talpha  beta\ngamma\x0bdelta"),
@@ -422,18 +418,19 @@ def test_minhash_signature_engines_identical(spark):
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     sql_rows = sorted((r.doc_id, tuple(r.signature)) for r in
-                      dedup.minhash_signatures(d, engine="sql").collect())
+                      dedup._minhash_signatures_sql(d).collect())
     pd_rows = sorted((r.doc_id, tuple(r.signature)) for r in
-                     dedup.minhash_signatures(d, engine="pandas").collect())
+                     dedup.minhash_signatures(d).collect())
     assert sql_rows == pd_rows
     assert {k for k, _ in sql_rows} == {1, 2, 6, 7, 8}
 
 
-def test_shingle_stream_engines_identical(spark):
+def test_shingle_stream_engines_identical(spark, monkeypatch):
     """r7 pin: the Arrow-batched shingle digest stream must match the
     native-expression stream exactly — per-doc distinct digests, the
     fewer-than-n-words drop, and whitespace edges — for both the short
-    (n=3) and long (n=8) chain regimes."""
+    (n=3) and long (n=8) chain regimes. SHINGLE_ARROW_MIN_N forces the
+    tier: 0 always streams through Arrow, a huge value never does."""
     rows = [
         (1, "a b c d e f g h i j"),
         (2, "\tx  y\nz\x0bw q r s t u"),
@@ -445,8 +442,11 @@ def test_shingle_stream_engines_identical(spark):
     d = spark.createDataFrame(rows, "doc_id long, text string")
     for n in (3, 8):
         got = {}
-        for eng in ("sql", "pandas"):
-            pairs = dedup.shingle_pairs(d, n=n, min_shared=1, engine=eng)
+        for eng, dial in (("sql", 10**9), ("pandas", 0)):
+            monkeypatch.setattr(dedup, "SHINGLE_ARROW_MIN_N", dial)
+            pairs = dedup.shingle_pairs(d, n=n, min_shared=1)
+            plan = pairs._jdf.queryExecution().executedPlan().toString()
+            assert ("MapInPandas" in plan) == (eng == "pandas"), (eng, n)
             got[eng] = sorted(tuple(r) for r in pairs.collect())
             dedup.release_caches()
         assert got["sql"] == got["pandas"], f"n={n}"

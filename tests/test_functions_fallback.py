@@ -18,49 +18,9 @@ def test_pii_redaction(spark):
     assert "a@b.com" not in got
 
 
-def test_numeric_confusables(spark):
-    assert _one(spark, tf.fix_numeric_confusables(F.lit("1O5Z"))) == "1052"
-    # non-digit-like strings untouched (guarded translate, P9)
-    assert _one(spark, tf.fix_numeric_confusables(F.lit("Oslo"))) == "Oslo"
-
-
-def test_unit_scaling(spark):
-    assert _one(spark, tf.scale_by_unit(F.lit(2.0), F.lit("lakh"))) == 200000.0
-    assert _one(spark, tf.scale_by_unit(F.lit(2.0), F.lit("unknown"))) == 2.0
-
-
-def test_clean_name(spark):
-    cases = {
-        "M/s Acme Traders,": "Acme Traders",
-        "by John Smith ;": "John Smith",
-        "Acme pvt. ltd.": "Acme Pvt Ltd",
-        "  Widgets   LTD  ": "Widgets Ltd",
-    }
-    for raw, want in cases.items():
-        assert _one(spark, tf.clean_name(F.lit(raw))) == want
-
-
 def test_similarity_columns(spark):
     r = _one(spark, tf.levenshtein_ratio(F.lit("kitten"), F.lit("sitting")))
     assert r == round(1 - 3 / 7, 4)
-
-
-def test_token_sort_ratio_matches_pure_python(spark):
-    pairs = [("Acme News Ltd", "ltd acme news"), ("abc", "xyz"), ("", "")]
-    df = spark.createDataFrame(pairs, "a string, b string")
-    got = df.select(tf.token_sort_ratio("a", "b").alias("r")).collect()
-    for (a, b), row in zip(pairs, got):
-        assert row.r == tf.token_sort_ratio_py(a, b)
-    assert tf.token_sort_ratio_py("Acme News Ltd", "ltd acme news") == 1.0
-
-
-def test_nfkc_udf_matches_pure(spark):
-    vals = ["ﬁne ｔｅｘｔ", "a|b_c~d^e", None]
-    df = spark.createDataFrame([(v,) for v in vals], "s string")
-    got = [r.n for r in df.select(tf.nfkc_normalize("s").alias("n")).collect()]
-    assert got[0] == tf.nfkc_normalize_py(vals[0]) == "fine text"
-    assert got[1] == "abcde"
-    assert got[2] is None
 
 
 def test_streaming_hourly_matches_batch(spark):

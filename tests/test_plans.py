@@ -140,12 +140,14 @@ def test_kmeans_training_plan_is_window_free(spark):
     assert "Window" not in plan
 
 
-def test_hyperplane_signatures_no_per_row_python_no_cartesian(spark):
-    """r7: the default signature tier is the vectorized Arrow "loop"
-    stage (bit-identical to the unrolled SQL sums — pinned separately);
-    the plan must contain exactly ONE vectorized Arrow eval for it,
-    never a row-at-a-time Python node, and the banded self-bucketing
-    must not be a cartesian. The sql tier stays fully JVM-side."""
+def test_hyperplane_signatures_no_per_row_python_no_cartesian(spark,
+                                                             monkeypatch):
+    """r7: the signature tier is the vectorized Arrow "loop" stage
+    (bit-identical to the unrolled SQL sums — pinned separately); the
+    plan must contain at most ONE vectorized Arrow eval for it, never a
+    row-at-a-time Python node, and the banded self-bucketing must not be
+    a cartesian. With the join pair tier forced, no grouped or mapped
+    Arrow stage may appear either."""
     import re
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
@@ -158,11 +160,12 @@ def test_hyperplane_signatures_no_per_row_python_no_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) <= 1
     dedup.release_caches()
-    plan_sql = _plan(similarity.hyperplane_lsh_pairs(
-        emb, dim=64, engine="sql", pair_engine="join"))
-    assert "ArrowEvalPython" not in plan_sql
-    assert "BatchEvalPython" not in plan_sql
-    assert "MapInPandas" not in plan_sql
+    monkeypatch.setattr(similarity, "HYPERPLANE_GROUPED_MIN_FILL", 10**9)
+    plan_join = _plan(similarity.hyperplane_lsh_pairs(emb, dim=64))
+    assert "MapInPandas" not in plan_join
+    assert "FlatMapGroupsInPandas" not in plan_join
+    assert "BatchEvalPython" not in plan_join
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan_join, re.M)) <= 1
     dedup.release_caches()
 
 

@@ -229,8 +229,9 @@ def test_hyperplane_pandas_tier_wide_band_no_overflow(spark):
         rows.append((i, [float(x) for x in v]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
+    assert planes * dim > similarity.HYPERPLANE_SQL_TERM_LIMIT  # matmul tier
     banded = similarity.hyperplane_banded_buckets(
-        emb, planes, bands, dim, "vec_id", "embedding", engine="pandas")
+        emb, planes, bands, dim, "vec_id", "embedding")
     got = banded.collect()
     assert banded.schema["bucket"].dataType.simpleString() == "bigint"
     assert all(r.bucket >= 0 for r in got)
@@ -245,7 +246,7 @@ def test_hyperplane_pandas_tier_wide_band_no_overflow(spark):
     assert {(r.k, r.band, r.bucket) for r in got} == ref
     with pytest.raises(ValueError, match="overflows the 63-bit bucket"):
         similarity.hyperplane_banded_buckets(
-            emb, 64, 1, dim, "vec_id", "embedding", engine="pandas")
+            emb, 64, 1, dim, "vec_id", "embedding")
     similarity.release_caches()
 
 
@@ -310,13 +311,15 @@ def test_hyperplane_mixed_dim_corpus_policy(spark):
     similarity.release_caches()
 
 
-def test_pair_engines_bit_identical(spark):
+def test_pair_engines_bit_identical(spark, monkeypatch):
     """r7 pin: the grouped Arrow pair stage must emit EXACTLY the join
     path's (vec_a, vec_b, cos_sim) rows — the NumPy accumulation replays
     the JVM fold's left-associative IEEE sequence, so even the 6-dp
     rounding boundaries cannot diverge. Pinned for both bucketing
     families (banded hyperplane LSH and IVF), on a corpus with mixed
-    dims so the NULL-poisoned-pair drop semantics match too."""
+    dims so the NULL-poisoned-pair drop semantics match too. The tier is
+    forced through the module's dial constants: at ~540 vectors both
+    dials pick the join path; a zero threshold picks grouped."""
     import random
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
@@ -335,31 +338,42 @@ def test_pair_engines_bit_identical(spark):
     rows.append((5001, None))          # NULL embedding: engines must agree
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def run(fn, pe):
-        got = sorted((r.vec_a, r.vec_b, r.cos_sim) for r in fn(pe).collect())
+    def run(fn, dial, value):
+        with monkeypatch.context() as m:
+            m.setattr(similarity, dial, value)
+            df = fn()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            got = sorted((r.vec_a, r.vec_b, r.cos_sim) for r in df.collect())
         dedup.release_caches()
-        return got
+        return got, "FlatMapGroupsInPandas" in plan
 
-    hp_join = run(lambda pe: similarity.hyperplane_lsh_pairs(
-        emb, threshold=0.30, dim=8, pair_engine=pe), "join")
-    hp_grp = run(lambda pe: similarity.hyperplane_lsh_pairs(
-        emb, threshold=0.30, dim=8, pair_engine=pe), "grouped")
-    assert hp_join == hp_grp and len(hp_join) > 0
+    def hp():
+        return similarity.hyperplane_lsh_pairs(emb, threshold=0.30, dim=8)
 
-    ivf_join = run(lambda pe: similarity.cosine_near_dup_pairs(
-        emb, threshold=0.30, pair_engine=pe), "join")
-    ivf_grp = run(lambda pe: similarity.cosine_near_dup_pairs(
-        emb, threshold=0.30, pair_engine=pe), "grouped")
-    assert ivf_join == ivf_grp and len(ivf_join) > 0
+    def ivf():
+        return similarity.cosine_near_dup_pairs(emb, threshold=0.30)
+
+    hp_join = run(hp, "HYPERPLANE_GROUPED_MIN_FILL", 10**9)
+    hp_grp = run(hp, "HYPERPLANE_GROUPED_MIN_FILL", 0)
+    assert hp_join[1] is False and hp_grp[1] is True
+    assert hp_join[0] == hp_grp[0] and len(hp_join[0]) > 0
+
+    ivf_join = run(ivf, "GROUPED_PAIRS_MIN_VECTORS", 10**9)
+    ivf_grp = run(ivf, "GROUPED_PAIRS_MIN_VECTORS", 0)
+    assert ivf_join[1] is False and ivf_grp[1] is True
+    assert ivf_join[0] == ivf_grp[0] and len(ivf_join[0]) > 0
 
 
 def test_hyperplane_sql_and_loop_tiers_identical(spark):
-    """r7 pin: the Arrow "loop" signature tier replays the unrolled SQL
-    sum's left-associative IEEE sequence exactly, so every (k, band,
-    bucket) row must be bit-identical to the sql tier — including
-    zero-padded short vectors and adversarial values that sit near
-    sign boundaries."""
+    """r7 pin: the Arrow "loop" signature tier replays the unrolled
+    `signature_sql` sum's left-associative IEEE sequence exactly, so
+    every (k, band, bucket) row must be bit-identical to DuckDB
+    evaluating that SQL over the same rows (the oracle's signature) —
+    including zero-padded short vectors, NULL cells and adversarial
+    values that sit near sign boundaries."""
     import random
+
+    import duckdb
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import similarity
 
@@ -375,21 +389,30 @@ def test_hyperplane_sql_and_loop_tiers_identical(spark):
     rows.append((50_002, [0.5, 0.25]))                   # short: zero-pad
     rows.append((50_003, None))  # NULL cell: sql coalesces to the zero row
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {}
-    for eng in ("sql", "loop"):
-        b = similarity.hyperplane_banded_buckets(
-            emb, 32, 4, 16, "vec_id", "embedding", engine=eng)
-        got[eng] = sorted((r.k, r.band, r.bucket) for r in b.collect())
-    assert got["sql"] == got["loop"]
+    assert 32 * 16 <= similarity.HYPERPLANE_SQL_TERM_LIMIT  # loop tier
+    b = similarity.hyperplane_banded_buckets(
+        emb, 32, 4, 16, "vec_id", "embedding")
+    got = sorted((r.k, r.band, r.bucket) for r in b.collect())
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE emb (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO emb VALUES (?, ?)", rows)
+    sig = similarity.signature_sql(32, 16, "CAST(embedding[{i}] AS DOUBLE)")
+    want = sorted((k, band, (s >> (band * 8)) & 0xFF)
+                  for k, s in con.sql(
+                      f"SELECT vec_id, ({sig}) FROM emb").fetchall()
+                  for band in range(4))
+    assert got == want and len(want) == 4 * len(rows)
 
 
-def test_ivf_assign_engines_identical(spark):
+def test_ivf_assign_engines_identical(spark, monkeypatch):
     """r7 pin: the Arrow scoring tier of ivf_assign must reproduce the
     expression tier exactly — same rounded sims and argmax winners —
     including length-mismatched vectors (NULL-poisoned sims) and a NULL
     seed vector (a NULL centroid: zip_with scores every pair against it
     NULL); a zero-norm vector must FAIL on both engines (the expression
-    tier raises DIVIDE_BY_ZERO under ANSI mode)."""
+    tier raises DIVIDE_BY_ZERO under ANSI mode). C=40 picks the Arrow tier;
+    raising IVF_ARROW_MIN_CENTROIDS forces the expression tier."""
     import random
 
     import pytest
@@ -406,16 +429,17 @@ def test_ivf_assign_engines_identical(spark):
         emb = spark.createDataFrame(
             bank, "vec_id long, embedding array<double>")
         got = {}
-        for eng in ("sql", "arrow"):
+        for eng, dial in (("sql", 10**9), ("arrow", 32)):
+            monkeypatch.setattr(similarity, "IVF_ARROW_MIN_CENTROIDS", dial)
             got[eng] = sorted(
-                tuple(r) for r in
-                similarity.ivf_assign(emb, 40, engine=eng).collect())
+                tuple(r) for r in similarity.ivf_assign(emb, 40).collect())
         assert got["sql"] == got["arrow"]
 
     zero = spark.createDataFrame(
         [(i, [float(i == j) for j in range(8)]) for i in range(40)]
         + [(100, [0.0] * 8)], "vec_id long, embedding array<double>")
-    for eng in ("sql", "arrow"):
+    for dial in (10**9, 32):
+        monkeypatch.setattr(similarity, "IVF_ARROW_MIN_CENTROIDS", dial)
         with pytest.raises(Exception, match="[Dd]ivi"):
-            similarity.ivf_assign(zero, 40, engine=eng).collect()
+            similarity.ivf_assign(zero, 40).collect()
 
